@@ -103,7 +103,7 @@ object Sketches {
     * under any partitioning, and EXACT whenever the true count < k
     * (toy-scale batches — parity asserted in tests).
     */
-  private class KmvDistinctAgg(k: Int)
+  private[graft] class KmvDistinctAgg(k: Int)
       extends Aggregator[String, Array[Long], Long] {
     @transient private lazy val md =
       java.security.MessageDigest.getInstance("MD5")

@@ -2,8 +2,13 @@ package graft.store
 
 import graft.kg.Triples
 import graft.model._
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import graft.ops.Sketches
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Iceberg-style checkpoint/lineage layer on Parquet (no Iceberg jar in
   * /opt/spark/jars — SURVEY.md §7.3).
@@ -11,8 +16,11 @@ import org.apache.spark.sql.functions._
   * Contract (north rule; reference analog: epoch-checkpoint resume,
   * models/bert.py:147-162, 171-173):
   *  - triples are written partitioned by `bucket = hash(doc_id) % B`;
-  *  - after each bucket's data lands, one lineage row per bucket is
-  *    APPENDED: (stage, partition_id, offset range, triple_count, rows_in,
+  *  - the per-bucket stats (triple count, span-offset range, KMV
+  *    distinct-doc estimate) are an observed metric of that write: the
+  *    write's own tasks compute them, with no second pass over the data;
+  *  - after the data lands, one lineage row per bucket is APPENDED:
+  *    (stage, partition_id, offset range, triple_count, rows_in,
   *    snapshot_id);
   *  - on restart, buckets already present in lineage are skipped via a
   *    LEFT ANTI join; pending buckets are recomputed and their partitions
@@ -26,42 +34,110 @@ object LineageStore {
   def lineagePath(root: String) = s"$root/_lineage"
   def triplesPath(root: String) = s"$root/triples"
 
+  /** Lineage rows, read with the [[LineageRow]] schema: no footer-reading
+    * schema-inference job. */
   def readLineage(spark: SparkSession, root: String): Dataset[LineageRow] = {
     import spark.implicits._
     val p = lineagePath(root)
     if (Fs.exists(spark, p))
-      spark.read.parquet(p).as[LineageRow]
+      spark.read.schema(Encoders.product[LineageRow].schema).parquet(p).as[LineageRow]
     else spark.emptyDataset[LineageRow]
   }
 
+  /** Lineage is O(buckets × commits) rows: collected and de-duplicated
+    * on the driver, one job and no shuffle. */
   def committedBuckets(spark: SparkSession, root: String, stage: String): Set[Int] = {
     import spark.implicits._
-    readLineage(spark, root).filter(_.stage == stage)
-      .map(_.partition_id).distinct().collect().toSet
+    readLineage(spark, root).where(col("stage") === stage)
+      .select(col("partition_id")).as[Int].collect().toSet
   }
 
-  /** The per-bucket lineage aggregation shared by the batch and
-    * streaming commit paths (one recipe, one sketch parameterization —
-    * the two cannot drift): triple count, span-offset range, KMV
-    * distinct-doc sketch per bucket.
+  /** One bucket's lineage stats while they are being aggregated, and
+    * when done: triple count, span-offset min/max, KMV state or estimate
+    * of its distinct docs. */
+  private[graft] case class BucketAcc(n: Long, omin: Int, omax: Int, kmv: Array[Long])
+  private[graft] case class BucketStat(bucket: Int, n: Long, omin: Int, omax: Int, docs: Long) {
+    def lineageRow(stage: String, snapshotId: String, now: Long): LineageRow =
+      LineageRow(stage, bucket, omin.toLong, omax.toLong, n, docs, snapshotId, now)
+  }
+
+  /** The per-bucket lineage stats of a triple set as ONE ungrouped
+    * aggregate over (bucket, span_offset, doc_id), so they can be
+    * observed on the write itself: state is bucket → (count, span-offset
+    * min/max, KMV sketch of the doc ids), O(buckets × k) longs whatever
+    * the data size. The sketch is [[Sketches.KmvDistinctAgg]]'s insert,
+    * merge and estimate with k = 64 (exact below 64 distinct docs per
+    * bucket), not a COUNT(DISTINCT): no doc-keyed shuffle per commit.
     */
-  private[graft] def bucketLineageRows(triples: org.apache.spark.sql.DataFrame,
-                                       stage: String, snapshotId: String,
-                                       now: Long): Array[LineageRow] =
-    triples.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"),
-        min(col("span_offset")).as("omin"),
-        max(col("span_offset")).as("omax"),
-        // mergeable KMV sketch, not COUNT(DISTINCT): k longs of state
-        // per bucket instead of a doc-keyed shuffle per commit (exact
-        // below k=64 distinct docs; same sketch as the streaming path)
-        graft.ops.Sketches.approxDistinctUdaf(64)(col("doc_id")).as("docs"))
-      .collect()
-      .map { r =>
-        LineageRow(stage, r.getAs[Int]("bucket"),
-          r.getAs[Int]("omin").toLong, r.getAs[Int]("omax").toLong,
-          r.getAs[Long]("n"), r.getAs[Long]("docs"), snapshotId, now)
+  private class BucketLineageAgg(k: Int)
+      extends Aggregator[(Int, Int, String), Map[Int, BucketAcc], Seq[BucketStat]] {
+    private val kmv = new Sketches.KmvDistinctAgg(k)
+    def zero: Map[Int, BucketAcc] = Map.empty
+    def reduce(b: Map[Int, BucketAcc], v: (Int, Int, String)): Map[Int, BucketAcc] = {
+      val (bucket, off, doc) = v
+      b.updated(bucket, b.get(bucket) match {
+        case Some(a) => BucketAcc(a.n + 1, math.min(a.omin, off),
+          math.max(a.omax, off), kmv.reduce(a.kmv, doc))
+        case None => BucketAcc(1L, off, off, kmv.reduce(kmv.zero, doc))
+      })
+    }
+    def merge(x: Map[Int, BucketAcc], y: Map[Int, BucketAcc]): Map[Int, BucketAcc] =
+      y.foldLeft(x) { case (m, (bucket, b)) =>
+        m.updated(bucket, m.get(bucket).fold(b)(a => BucketAcc(a.n + b.n,
+          math.min(a.omin, b.omin), math.max(a.omax, b.omax), kmv.merge(a.kmv, b.kmv))))
       }
+    def finish(b: Map[Int, BucketAcc]): Seq[BucketStat] =
+      b.toSeq.sortBy(_._1).map { case (bucket, a) =>
+        BucketStat(bucket, a.n, a.omin, a.omax, kmv.finish(a.kmv))
+      }
+    def bufferEncoder = ExpressionEncoder[Map[Int, BucketAcc]]()
+    def outputEncoder = ExpressionEncoder[Seq[BucketStat]]()
+  }
+
+  private val bucketLineage = udaf(new BucketLineageAgg(64),
+    Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt, Encoders.STRING))
+
+  /** Bound on the wait for a write's observed stats. Spark delivers them
+    * through its listener bus once the write has succeeded, so the wait
+    * is normally a few milliseconds. */
+  private val observationWait = 60.seconds
+
+  /** Run `write` over `triples` with the per-bucket lineage stats
+    * observed on it, and return them — the recipe of the batch and
+    * streaming commits both, so the two cannot drift.
+    *
+    * The stats come back from the tasks of the write job itself
+    * (`Dataset.observe`): no persist and no second pass over the data.
+    * `write` must write the dataset it is given with no shuffle above
+    * it (a partitioned write only sorts), so the observation sits in
+    * the result stage, where Spark applies each partition's update
+    * exactly once. Throws if the stats are not delivered within
+    * [[observationWait]], so the caller appends no lineage.
+    */
+  private[graft] def writeObserved(triples: DataFrame)
+                                  (write: DataFrame => Unit): Seq[BucketStat] = {
+    val obs = Observation()
+    write(triples.observe(obs,
+      bucketLineage(col("bucket"), col("span_offset"), col("doc_id")).as("buckets")))
+    // an observation Spark could not fill completes with an empty row
+    // (CommitSpec has one), or not at all
+    val stats =
+      try Some(Await.result(obs.future, observationWait)).filter(_.size == 1)
+      catch { case _: java.util.concurrent.TimeoutException => None }
+    stats.getOrElse(throw new IllegalStateException("the write's lineage " +
+      s"stats were not observed within $observationWait; no lineage appended"))
+      .getSeq[Row](0).map(r =>
+      BucketStat(r.getInt(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(4)))
+  }
+
+  /** Append lineage rows as ONE file, so `_lineage` grows by one file
+    * per commit however many cores the session has. */
+  private[graft] def appendLineage(spark: SparkSession, root: String,
+                                   rows: Seq[LineageRow]): Unit = {
+    import spark.implicits._
+    spark.createDataset(rows).coalesce(1).write.mode(SaveMode.Append)
+      .parquet(lineagePath(root))
+  }
 
   /** Run `body` with dynamic partition overwrite, then RESTORE the
     * session's previous mode — a leaked session-wide "dynamic" would
@@ -82,61 +158,57 @@ object LineageStore {
   /** Write triples for (possibly a subset of) buckets + lineage rows.
     * snapshotId should be a content/config hash — the Spark analog of the
     * reference's request-hash memoization key (webapp/app.py:157-158).
+    * One commit is one data write plus one lineage append: the lineage
+    * stats are observed on the data write ([[writeObserved]]).
     *
     * `processedBuckets`, when given, is the FULL set of buckets this
     * commit covers: buckets in it that produced ZERO triples still get a
     * lineage row (triple_count = 0) — without one, resume would treat a
     * legitimately-empty bucket as pending and reprocess it on every
-    * restart, never converging to zero work.
+    * restart, never converging to zero work. A triple in a bucket
+    * outside it fails the commit before any lineage row is appended.
     */
   def commit(spark: SparkSession, root: String, stage: String,
              triples: Dataset[Triple], snapshotId: String,
              processedBuckets: Option[Set[Int]] = None): Unit = {
-    import spark.implicits._
-    val persisted = triples.persist()
-    withDynamicOverwrite(spark) {
-      persisted.write
-        .mode(SaveMode.Overwrite)
-        .partitionBy("bucket")
-        .parquet(triplesPath(root))
+    val stats = withDynamicOverwrite(spark) {
+      writeObserved(triples.toDF()) {
+        _.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(triplesPath(root))
+      }
     }
+    val written = stats.map(_.bucket).toSet
+    val covered = processedBuckets.getOrElse(written)
+    val outside = written -- covered
+    require(outside.isEmpty, s"$stage/$snapshotId: triples written to " +
+      s"buckets ${outside.toSeq.sorted.mkString(",")} outside the commit's " +
+      "buckets; no lineage appended")
+    val empty = (covered -- written).toSeq.sorted.map(BucketStat(_, 0L, 0, 0, 0L))
     val now = System.currentTimeMillis()
-    val dataRows = bucketLineageRows(persisted.toDF(), stage, snapshotId, now)
-    persisted.unpersist()
-    val emptyRows = processedBuckets
-      .map(_ -- dataRows.map(_.partition_id).toSet).getOrElse(Set.empty)
-      .toSeq.sorted
-      .map(b => LineageRow(stage, b, 0L, 0L, 0L, 0L, snapshotId, now))
-    val rows = dataRows.toSeq ++ emptyRows
-    if (rows.nonEmpty)
-      spark.createDataset(rows).write.mode(SaveMode.Append)
-        .parquet(lineagePath(root))
+    val rows = (stats ++ empty).map(_.lineageRow(stage, snapshotId, now))
+    if (rows.nonEmpty) appendLineage(spark, root, rows)
   }
 
   /** Resumable run: process only buckets NOT yet in lineage. Returns the
-    * number of buckets processed this invocation.
+    * number of buckets processed this invocation — every pending bucket,
+    * as the commit appends a lineage row for each.
     */
   def runResumable(spark: SparkSession, root: String, stage: String,
                    docs: Dataset[Doc],
                    pipeline: Dataset[Doc] => Dataset[Triple],
                    buckets: Int, snapshotId: String): Int = {
-    import spark.implicits._
     recoverCompaction(spark, root) // heal an interrupted compaction first
     val done = committedBuckets(spark, root, stage)
     val pendingBuckets = (0 until buckets).toSet -- done
     if (pendingBuckets.isEmpty) return 0
-    val bcDone = spark.sparkContext.broadcast(done)
     // left-anti-join semantics against the lineage table (SURVEY §2.9 ST3);
-    // the committed set is dictionary-sized (≤ buckets), so a broadcast
-    // filter replaces the shuffle an actual anti join would cost.
-    val pending = docs.filter(d => !bcDone.value.contains(Triples.bucketOf(d.doc_id, buckets)))
+    // the committed set is dictionary-sized (≤ buckets), so a filter
+    // closing over it replaces the shuffle an actual anti join would cost.
+    val pending = docs.filter(d => !done.contains(Triples.bucketOf(d.doc_id, buckets)))
     // even a doc-less / triple-less pending set commits: every pending
     // bucket gets its lineage row (possibly zero-count), so resume
     // CONVERGES instead of re-examining empty buckets forever
-    val triples =
-      if (pending.isEmpty) spark.emptyDataset[Triple] else pipeline(pending)
-    commit(spark, root, stage, triples, snapshotId, Some(pendingBuckets))
-    committedBuckets(spark, root, stage).size - done.size
+    commit(spark, root, stage, pipeline(pending), snapshotId, Some(pendingBuckets))
+    pendingBuckets.size
   }
 
   /** Iceberg-style small-file compaction (the `rewrite_data_files`

@@ -66,32 +66,33 @@ object StreamIngest {
     val cfgS = cfg.copy(dictStore = cfg.dictStore.orElse(Some(root)))
     val (rows, metrics) = graft.store.StageMetrics.capture(spark) {
       LineageStore.withDynamicOverwrite(spark) {
-        val triples = KgPipeline.run(spark, batch, aliases, cfg = cfgS, ctx = Some(ctx))
-          .withColumn("batch", lit(batchId))
-        val persisted = triples.persist()
-        persisted.write.mode(SaveMode.Overwrite)
-          .partitionBy("batch", "bucket")
-          .parquet(streamPath(root))
+        // persisted: the canon map and the quality sidecar read the batch
+        // after the write
+        val persisted = KgPipeline.run(spark, batch, aliases, cfg = cfgS, ctx = Some(ctx))
+          .withColumn("batch", lit(batchId)).persist()
+        // the SAME per-bucket lineage recipe as the batch store, observed
+        // on the write (LineageStore.writeObserved — one copy, the two
+        // paths cannot drift)
+        val stats = LineageStore.writeObserved(persisted) {
+          _.write.mode(SaveMode.Overwrite)
+            .partitionBy("batch", "bucket")
+            .parquet(streamPath(root))
+        }
         val now = System.currentTimeMillis()
-        // the SAME per-bucket lineage recipe as the batch store
-        // (LineageStore.bucketLineageRows — one copy, the two paths
-        // cannot drift). An all-empty batch still commits ONE marker
-        // row (partition_id = -1, zero counts): without it the
-        // idempotency probe above never finds the snapshot and a
-        // replayed empty batch re-runs the pipeline on every restart.
-        val dataRows = LineageStore.bucketLineageRows(
-          persisted.toDF(), "stream_triples", snap, now)
-        val rws = if (dataRows.nonEmpty) dataRows.toSeq
+        // An all-empty batch still commits ONE marker row (partition_id =
+        // -1, zero counts): without it the idempotency probe above never
+        // finds the snapshot and a replayed empty batch re-runs the
+        // pipeline on every restart.
+        val rws = if (stats.nonEmpty) stats.map(_.lineageRow("stream_triples", snap, now))
           else Seq(LineageRow("stream_triples", -1, 0L, 0L, 0L, 0L, snap, now))
-        updateCanonMap(spark, persisted.toDF(), batchId, root)
-        writeQuality(spark, persisted.toDF(), batchId, root)
+        updateCanonMap(spark, persisted, batchId, root)
+        writeQuality(spark, persisted, batchId, root)
         persisted.unpersist()
         rws
       }
     }
     graft.store.StageMetrics.write(spark, root, "stream_triples", snap, metrics)
-    spark.createDataset(rows).write.mode(SaveMode.Append)
-      .parquet(LineageStore.lineagePath(root))
+    LineageStore.appendLineage(spark, root, rows)
     graft.store.Snapshots.commitStreamBatch(spark, root, batchId,
       rows.map(_.triple_count).sum,
       graft.store.Snapshots.configHash(

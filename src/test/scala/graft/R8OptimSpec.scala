@@ -124,7 +124,8 @@ class R8OptimSpec extends AnyFunSuite {
     val docs = graft.gen.CorpusGen.docs(spark, 60, parts = 4)
     graft.store.LineageStore.runResumable(spark, dir, "triples", docs,
       ds => graft.pipeline.KgPipeline.run(spark, ds,
-        graft.gen.CorpusGen.aliases(spark)),
+        graft.gen.CorpusGen.aliases(spark),
+        cfg = graft.pipeline.KgPipeline.Config(buckets = 16)),
       buckets = 16, "r8min")
     // BEFORE compaction there is no manifest: must fall back to the scan
     val scanMin = graft.store.LineageStore.readTriples(spark, dir)

@@ -3,6 +3,7 @@ package graft
 import graft.gen.CorpusGen
 import graft.pipeline.KgPipeline
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, hash, sum}
 
 /** Driver-run benchmark: headline queries on SPARK_GRAFT_SF_DIR at
   * local[SPARK_GRAFT_CPUS]; prints ONE JSON line. Also reports the KG
@@ -44,12 +45,26 @@ object Bench {
     ((System.nanoTime() - t0) / 1e9, cnt)
   }
 
+  /** Host-regime control: a pure whole-stage-codegen kernel (range →
+    * hash → sum over 256 granules) with no IO and no library code, so
+    * its wall time moves only with the host's CPU throughput. One warm
+    * pass, then one timed pass.
+    */
+  private def controlSec(spark: SparkSession): Double = {
+    def run(): Long = spark.range(0, 4000000000L, 1, 256)
+      .select(sum(hash(col("id") * 31 + 7)).as("h")).collect()(0).getLong(0)
+    run()
+    val t0 = System.nanoTime(); run()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     // locale-proof JSON: `f"$v%.3f"` uses the default locale — under a
     // comma-decimal locale the output would be invalid JSON
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = session(cpus)
 
     // headline SQL queries (warm once to exclude first-touch JIT/IO noise)
@@ -88,7 +103,7 @@ object Bench {
       if (sfDir.contains("0.01")) 6000L
       else if (sfDir.contains("0.1")) 60000L else 600L
     // fixed 256 input partitions: ~8 waves at 32 threads — tail-tolerant
-    // load balance matching ScalingBench
+    // load balance
     val parts = 256
     val ctx = Some(KgPipeline.prepareLinkContext(spark, CorpusGen.aliases(spark)))
     kgRun(spark, nDocs, parts, ctx) // full-size JIT warm-up (C2 needs a pass)
@@ -138,8 +153,8 @@ object Bench {
 
     // host-regime control (same JVM, same window): every query is also
     // reported as wall / control so round-over-round movement separates
-    // code from host drift (see CpuProbe)
-    val control = CpuProbe.control(spark)
+    // code from host drift (see controlSec)
+    val control = controlSec(spark)
 
     val total = results.values.sum
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }

@@ -4,13 +4,15 @@ import java.nio.file.{Files, Paths}
 
 /** Writes PLANS.md: `explain("formatted")` output for the plan-critical
   * queries — the human-readable twin of PlanSpec's assertions (pushdown,
-  * pruning, broadcast, codegen spans, shuffle-free detect stage).
+  * pruning, broadcast, codegen spans, shuffle-free detect stage), then
+  * the whole KG pipeline plan on the broadcast and the salted link.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
-    val spark = Bench.session("4")
+    val cpus = Runtime.getRuntime.availableProcessors.toString
+    val spark = Bench.session(cpus)
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans (generated by graft.DumpPlans)\n\n")
     sb.append("Assertions over these plans live in PlanSpec; this file is the\n")
@@ -94,7 +96,7 @@ object DumpPlans {
       org.apache.spark.sql.SparkSession.clearActiveSession()
       org.apache.spark.sql.SparkSession.clearDefaultSession()
       val s2 = org.apache.spark.sql.SparkSession.builder()
-        .master("local[4]").appName("graft-plans-ext")
+        .master(s"local[$cpus]").appName("graft-plans-ext")
         .withExtensions(new GraftExtensions).getOrCreate()
       val c = s2.read.parquet(s"$sf/customer.parquet")
       val o = s2.read.parquet(s"$sf/orders.parquet")
@@ -107,6 +109,34 @@ object DumpPlans {
       sb.append("```\n")
       org.apache.spark.sql.SparkSession.setDefaultSession(spark)
       org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
+    // the whole KgPipeline.run plan on both link paths, built as the
+    // KG benchmark builds it: broadcast map, then the salted join over a
+    // DictStore snapshot in a temp dir
+    locally {
+      import gen.CorpusGen
+      import pipeline.KgPipeline
+      def kgSection(title: String, df: org.apache.spark.sql.DataFrame): Unit = {
+        sb.append(s"\n## $title\n\n```\n")
+        sb.append(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+        sb.append("```\n")
+      }
+      val ctx = Some(KgPipeline.prepareLinkContext(spark, CorpusGen.aliases(spark)))
+      kgSection("kg pipeline, broadcast link (KgPipeline.run)",
+        KgPipeline.run(spark, CorpusGen.docs(spark, 2000, 16),
+          CorpusGen.aliases(spark), ctx = ctx).toDF())
+      val dictRoot = Files.createTempDirectory("graft_plan_dict")
+      try {
+        val cfg = KgPipeline.Config(broadcastLink = false,
+          dictStore = Some(dictRoot.toString))
+        val saltedCtx = Some(KgPipeline.prepareSaltedContext(spark,
+          CorpusGen.aliases(spark), dictRoot.toString))
+        kgSection("kg pipeline, salted link over a DictStore (KgPipeline.run)",
+          KgPipeline.run(spark, CorpusGen.docs(spark, 2000, 16),
+            CorpusGen.aliases(spark), cfg = cfg, ctx = saltedCtx).toDF())
+      } finally scala.util.Using.resource(Files.walk(dictRoot))(
+        _.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p)))
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")

@@ -364,26 +364,33 @@ object Ann {
     // (guide §2.6: actions are only sequential because the driver calls
     // them sequentially); values are unaffected — each branch is the
     // same deterministic plan, just constructed on another thread.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val exactF = Future(
-      bruteTopK(emb, k, queryMod).select(col("q_id"), col("nn_id")))
-    val lshF = Future(
-      lshTopK(emb, k, planes, queryMod).select(col("q_id"), col("nn_id")))
-    val ivfF = Future(
-      ivfTopK(emb, k, probes, queryMod = queryMod)
-        .select(col("q_id"), col("nn_id")))
-    val multiF = Future(
-      lshTopKMulti(emb, k, queryMod = queryMod)
-        .select(col("q_id"), col("nn_id")))
-    val exact = Await.result(exactF, Duration.Inf)
-    recallOf(exact, Await.result(lshF, Duration.Inf), "lsh")
-      .unionByName(recallOf(exact, Await.result(ivfF, Duration.Inf),
-        s"ivf_p$probes"))
-      .unionByName(recallOf(exact, Await.result(multiF, Duration.Inf),
-        "lsh_multi"))
+    // a pool of its own (one thread per branch), shut down on the way
+    // out, and a bounded wait: a stuck branch surfaces as a
+    // TimeoutException instead of hanging the caller
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val exactF = Future(
+        bruteTopK(emb, k, queryMod).select(col("q_id"), col("nn_id")))
+      val lshF = Future(
+        lshTopK(emb, k, planes, queryMod).select(col("q_id"), col("nn_id")))
+      val ivfF = Future(
+        ivfTopK(emb, k, probes, queryMod = queryMod)
+          .select(col("q_id"), col("nn_id")))
+      val multiF = Future(
+        lshTopKMulti(emb, k, queryMod = queryMod)
+          .select(col("q_id"), col("nn_id")))
+      def get(f: Future[DataFrame]): DataFrame = Await.result(f, recallBranchWait)
+      val exact = get(exactF)
+      recallOf(exact, get(lshF), "lsh")
+        .unionByName(recallOf(exact, get(ivfF), s"ivf_p$probes"))
+        .unionByName(recallOf(exact, get(multiF), "lsh_multi"))
+    } finally pool.shutdownNow()
   }
+
+  /** Bound on the wait for each of [[recallAtK]]'s plan builds. */
+  private val recallBranchWait = scala.concurrent.duration.Duration(30, "min")
 
   /** Product-quantization ADC search (Jégou, Douze & Schmid 2011,
     * "Product quantization for nearest neighbor search" — public

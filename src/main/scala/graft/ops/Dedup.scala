@@ -531,8 +531,8 @@ object Dedup {
     * kernel — the HOF fold evaluates interpreted per boxed element and
     * dominates the within-cell O(pairs·d) work otherwise.
     */
-  private def semanticPairs(emb: DataFrame, k: Int, updates: Int,
-                            tPm: Long, scale: Int)
+  private[graft] def semanticPairs(emb: DataFrame, k: Int, updates: Int,
+                                   tPm: Long, scale: Int)
       : (DataFrame, DataFrame) = {
     require(scale <= 100 && tPm <= 1000L,
       s"scale=$scale/tPm=$tPm can overflow the Long-safe predicate bound")
@@ -593,15 +593,19 @@ object Dedup {
         var i = 0
         while (i < ms.length) {
           var j = i + 1
+          // a repeated vec_id is one vector, never its own near-dup
+          // (the oracle pairs on a strict a.vec_id < b.vec_id)
           while (j < ms.length) {
-            val (a, b) =
-              if (ms(i)._2 < ms(j)._2) (ms(i), ms(j)) else (ms(j), ms(i))
-            val va = a._3; val vb = b._3
-            var d = 0L
-            var t = 0
-            while (t < va.length) { d += va(t) * vb(t); t += 1 }
-            if (d > 0 && d * d * 1000000L >= tPm2 * a._4 * b._4)
-              out += ((cell, a._2, b._2))
+            if (ms(i)._2 != ms(j)._2) {
+              val (a, b) =
+                if (ms(i)._2 < ms(j)._2) (ms(i), ms(j)) else (ms(j), ms(i))
+              val va = a._3; val vb = b._3
+              var d = 0L
+              var t = 0
+              while (t < va.length) { d += va(t) * vb(t); t += 1 }
+              if (d > 0 && d * d * 1000000L >= tPm2 * a._4 * b._4)
+                out += ((cell, a._2, b._2))
+            }
             j += 1
           }
           i += 1

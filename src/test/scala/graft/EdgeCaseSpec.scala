@@ -146,6 +146,14 @@ class EdgeCaseSpec extends AnyFunSuite {
     // two zero vectors: dot = 0 → never "similar", both kept
     assert(graft.ops.Dedup.semanticDedup(zeros, k = 1)
       .where(col("is_dup") === 1L).count() == 0)
+    // a repeated vec_id is one vector: the oracle pairs on a strict
+    // a.vec_id < b.vec_id, so no (id, id) pair and no dup
+    val rep = Seq((1L, Array.fill(64)(0.1f)), (1L, Array.fill(64)(0.1f)))
+      .toDF("vec_id", "embedding")
+    val (_, repPairs) = graft.ops.Dedup.semanticPairs(rep, 1, 2, 950L, 100)
+    assert(repPairs.where(col("vec_a") === col("vec_b")).count() == 0)
+    assert(graft.ops.Dedup.semanticDedup(rep, k = 1)
+      .where(col("is_dup") === 1L).count() == 0)
     // dsirSelect: empty target set (tt = 0) must not throw — weights
     // become log2((raw_b+1)/(R+1))-shaped, still a total order
     val d = Seq((1L, "a b c", "s"), (2L, "d e f", "s"))

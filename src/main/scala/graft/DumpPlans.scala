@@ -6,11 +6,42 @@ import java.nio.file.{Files, Paths}
   * queries — the human-readable twin of PlanSpec's assertions (pushdown,
   * pruning, broadcast, codegen spans, shuffle-free detect stage), then
   * the whole KG pipeline plan on the broadcast and the salted link.
+  *
+  *   runMain graft.DumpPlans <data-dir> [out-file, default PLANS.md]
+  *
+  * Expression ids, plan ids and lambda identities change from run to
+  * run, so each section's are rewritten to stable tokens ([[stable]]):
+  * regenerating the file on unchanged plans leaves it unchanged.
   */
 object DumpPlans {
+  private val ExprId = "#(\\d+)".r
+  private val PlanId = "plan_id=(\\d+)".r
+  private val Lambda = "\\$\\$Lambda[$\\d]*/0x[0-9a-f]+(@[0-9a-f]+)?".r
+  // the random parts of temp-dir and part-file names in scan locations
+  private val TmpDir = "(/graft_[a-z_]+?)\\d{6,}".r
+  private val Uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+
+  /** `plan` with lambda identities replaced by `$$Lambda`, temp-dir and
+    * file uuids by fixed tokens, and each expression / plan id
+    * renumbered by its first appearance. */
+  def stable(plan: String): String = {
+    def renumber(s: String, re: scala.util.matching.Regex, pre: String) = {
+      val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      re.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
+        pre + ids.getOrElseUpdate(m.group(1), ids.size + 1)))
+    }
+    val fixed = Uuid.replaceAllIn(TmpDir.replaceAllIn(
+      Lambda.replaceAllIn(plan, "\\$\\$Lambda"), "$1N"), "UUID")
+    renumber(renumber(fixed, ExprId, "#"), PlanId, "plan_id=")
+  }
+
   def main(args: Array[String]): Unit = {
-    val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
+    if (args.isEmpty) {
+      System.err.println("usage: graft.DumpPlans <data-dir> [out-file]")
+      sys.exit(2)
+    }
+    val sf = args(0)
+    val out = if (args.length > 1) args(1) else "PLANS.md"
     val cpus = Runtime.getRuntime.availableProcessors.toString
     val spark = Bench.session(cpus)
     val sb = new StringBuilder
@@ -34,8 +65,8 @@ object DumpPlans {
       val df = SparkEntry.queries(q)(spark, sf)
       df.collect() // finalize AQE
       sb.append(s"\n## $q\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(stable(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
       sb.append("```\n")
     }
     // the fused detect stage: one mapPartitions chain, no Exchange
@@ -43,7 +74,7 @@ object DumpPlans {
       pipeline.KgPipeline.sentences(spark, gen.CorpusGen.docs(spark, 50, 4)),
       new tag.GazetteerTagger(pipeline.KgPipeline.defaultGazetteer))
     sb.append("\n## kg detect stage (docs → sentences → windows → tagger → mentions)\n\n```\n")
-    sb.append(mentions.queryExecution.executedPlan.toString)
+    sb.append(stable(mentions.queryExecution.executedPlan.toString))
     sb.append("```\n")
     // the de-drivered salted carry link: dictionary-side scoring AND
     // canonicalization joined in before the corpus-side shuffle; the
@@ -60,7 +91,7 @@ object DumpPlans {
         skewKeys = Some(Seq("anna muller")), canon = Some(canon))
       linked.collect()
       sb.append("\n## salted carry link (de-drivered: dict-side canon + bloom prune + skew salt)\n\n```\n")
-      sb.append(linked.queryExecution.executedPlan.toString)
+      sb.append(stable(linked.queryExecution.executedPlan.toString))
       sb.append("```\n")
     }
     // the salted CONTEXTUAL link past the broadcast threshold: the
@@ -85,7 +116,7 @@ object DumpPlans {
           skewKeys = Some(Seq(neu)))
         linked.collect()
         sb.append("\n## salted contextual link, broadcast disabled (shuffle keys = surface_norm + salt)\n\n```\n")
-        sb.append(linked.queryExecution.executedPlan.toString)
+        sb.append(stable(linked.queryExecution.executedPlan.toString))
         sb.append("```\n")
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
@@ -105,7 +136,7 @@ object DumpPlans {
         .select("c_custkey", "c_name")
       df.collect()
       sb.append("\n## q04 shape under InjectDeterministicBloom (extensions session)\n\n```\n")
-      sb.append(df.queryExecution.optimizedPlan.toString)
+      sb.append(stable(df.queryExecution.optimizedPlan.toString))
       sb.append("```\n")
       org.apache.spark.sql.SparkSession.setDefaultSession(spark)
       org.apache.spark.sql.SparkSession.setActiveSession(spark)
@@ -118,8 +149,8 @@ object DumpPlans {
       import pipeline.KgPipeline
       def kgSection(title: String, df: org.apache.spark.sql.DataFrame): Unit = {
         sb.append(s"\n## $title\n\n```\n")
-        sb.append(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+        sb.append(stable(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)))
         sb.append("```\n")
       }
       val ctx = Some(KgPipeline.prepareLinkContext(spark, CorpusGen.aliases(spark)))

@@ -7,21 +7,28 @@ import org.apache.spark.sql.functions._
 
 /** Entity linking: mention surface → entity record.
   *
-  * Two physical strategies for the same logical join (SURVEY.md §2.4):
+  * Three physical forms of the same logical join (SURVEY.md §2.4):
   *
   *  - [[linkBroadcast]]: the alias dictionary fits in memory → broadcast
   *    map lookup inside a typed map (a dictionary join, like the
   *    reference's label/vocab lookups, data_processor.py:428). Zero
-  *    shuffle; the 100 TB default when the dictionary is ≤ a few GB.
+  *    shuffle; `KgPipeline`'s broadcast path does the same lookup.
   *
-  *  - [[linkSaltedJoin]]: dictionary too big to broadcast → shuffle hash
-  *    join with SALTING to defuse head-entity skew (Zipfian surfaces mean
-  *    a handful of keys carry most mentions): the dictionary side is
-  *    replicated S× with a salt column, the mention side draws
+  *  - [[scoredDict]] joined plainly: `KgPipeline`'s salted path joins
+  *    its mention rows ONCE against the scored dictionary, with no
+  *    hint — Spark plans a broadcast-hash join while the scored table is
+  *    under the broadcast threshold and a shuffled one past it, where
+  *    AQE's skew-join split takes the head-entity skew.
+  *
+  *  - [[linkSaltedJoin]] / [[linkSaltedCarry]]: shuffle hash join with
+  *    hand SALTING of head-entity skew (Zipfian surfaces mean a handful
+  *    of keys carry most mentions): the dictionary side is replicated
+  *    S× with a salt column, the mention side draws
   *    `pmod(hash(doc_id), S)`, and the join key becomes
-  *    (surface_norm, salt). AQE skew-join stays on as a second line of
-  *    defense. Candidate scoring picks max prior, tie-broken by min
-  *    entity_id, via max_by on a struct — one aggregation, no window.
+  *    (surface_norm, salt). Used by query entries and link replays.
+  *
+  * Candidate scoring picks type match, then max prior, then min
+  * entity_id — one min_by aggregation over a struct key, no window.
   */
 object Linker {
 
@@ -277,10 +284,9 @@ object Linker {
     val best = scored.getOrElse(scoredDict(spark, aliases, canon))
     // skew-aware salting: heads replicated saltBuckets×, rest on salt 0.
     // The scored dictionary table is MATERIALIZED once (dictionary-sized,
-    // cheap): the pipeline consumes the link output twice (mention units
-    // and relation re-pairing), and without the cut each consumer would
-    // re-run the whole dict-side chain — canon join, two aggregations,
-    // salt explode (verified: zero ReusedExchange across the branches).
+    // cheap): a caller consuming the link output twice would otherwise
+    // re-run the whole dict-side chain per consumer — canon join, two
+    // aggregations, salt explode (zero ReusedExchange across branches).
     val bestSalted = explodeSalts(best, skewArr, saltBuckets)
       .localCheckpoint(eager = false, graft.ops.Par.cutLevel)
     val salted = mIn.withColumn("salt", mentionSalt(skewArr, saltBuckets))
@@ -307,22 +313,27 @@ object Linker {
     * O(dictionary) aggregation (one array row per surface, fan-out
     * bounded by candidates-per-surface — dictionary-shaped, never
     * corpus²); the mention side pays ONE surface-keyed join (salt/bloom
-    * composable exactly like [[linkSaltedCarry]]), one doc-keyed
-    * aggregation over the already-joined mentions (the detect cache's
-    * partitioning), and one co-partitioned doc-keyed join back. Best-
+    * composable exactly like [[linkSaltedCarry]]) and one doc-keyed
+    * window over the already-joined mentions for the anchor set. Best-
     * candidate selection is a per-row `aggregate` higher-order function
-    * over the carried array — no re-shuffle on a wide mention key, no
-    * window.
+    * over the carried array — no re-shuffle on a wide mention key.
     *
     * `m` carries (doc_id, span_offset, sentence_idx, surface_norm,
-    * entity_type); output adds (entity_id, conf, ctx_hit 1/0).
+    * entity_type); output adds (entity_id, conf, ctx_hit 1/0). A row
+    * without a candidate drops (OOV — same semantics as every other
+    * link path) unless it matches `keep`, in which case it passes
+    * through with a null `entity_id` (the pipeline's media rows).
     */
   def linkContextual(spark: SparkSession, m: DataFrame,
                      aliases: Dataset[Alias],
-                     canon: Option[DataFrame] = None): DataFrame = {
+                     canon: Option[DataFrame] = None,
+                     keep: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val cands = ctxCandidates(aliases, canon)
-    val joined = m.join(cands, Seq("surface_norm")) // inner: OOV drops,
-      // same semantics as every other link path
+    val joined = keep match {
+      case None => m.join(cands, Seq("surface_norm"))
+      case Some(k) => m.join(cands, Seq("surface_norm"), "left_outer")
+        .where(k || col("cands").isNotNull)
+    }
     ctxPick(joined, m.columns.toIndexedSeq)
   }
 
@@ -353,19 +364,19 @@ object Linker {
   }
 
   /** The doc-coherence selection over an already-joined m ⋈ candidates
-    * frame: anchor aggregation (doc-keyed), anchor join-back, and the
-    * per-row lexicographic best-candidate fold. Identical for the plain
-    * and salted join shapes — only the join above differs.
+    * frame: the doc's anchor set as a doc-keyed window (the joined rows
+    * are read once, not once for an anchor aggregation and again for
+    * its join-back), and the per-row lexicographic best-candidate fold.
+    * Identical for the plain and salted join shapes — only the join
+    * above differs.
     */
   private def ctxPick(joined: DataFrame, mCols: Seq[String]): DataFrame = {
-    val anchors = joined.where(col("n_ents") === 1)
-      .select(col("doc_id"),
-        // n_ents == 1 ⇒ every candidate row shares one out_id
-        element_at(col("cands"), 1).getField("entity_id").as("aid"))
-      .groupBy("doc_id").agg(collect_set(col("aid")).as("anchors"))
-    val ctx = joined.join(anchors, Seq("doc_id"), "left")
-      .withColumn("anchors",
-        coalesce(col("anchors"), array().cast("array<string>")))
+    // n_ents == 1 ⇒ every candidate row shares one out_id; collect_set
+    // skips the nulls of ambiguous and unmatched rows
+    val anchorId = when(col("n_ents") === 1,
+      element_at(col("cands"), 1).getField("entity_id"))
+    val ctx = joined.withColumn("anchors", collect_set(anchorId)
+      .over(org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
     // lexicographic candidate key: (type mismatch, context miss,
     // -prior, raw id) — struct comparison gives the total order; the
     // prior-only key is the same struct minus the context slot, so
@@ -393,11 +404,10 @@ object Linker {
     * surfaces (Zipf skew) are replicated `saltBuckets`× exactly like
     * [[linkSaltedCarry]]'s scored dictionary ([[explodeSalts]] /
     * [[mentionSalt]] — one code path, they cannot drift), and the bloom
-    * prune keeps OOV mentions out of the shuffle. Anchor aggregation
+    * prune keeps OOV mentions out of the shuffle. The anchor window
     * and the best-candidate fold are untouched ([[ctxPick]]): the
-    * anchors stay doc-keyed (the detect cache's partitioning), so the
-    * context feature costs no additional corpus-wide shuffle beyond the
-    * salted surface join itself. Result-identical to [[linkContextual]]
+    * anchors stay doc-keyed, so the context feature costs one doc-keyed
+    * shuffle beyond the salted surface join itself. Result-identical to [[linkContextual]]
     * (each mention row draws exactly one salt and the dictionary side
     * carries that salt for its surface — parity asserted in
     * LinkerCtxSpec; salt keys in the shuffle plan asserted in PlanSpec).

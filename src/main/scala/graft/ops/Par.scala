@@ -30,8 +30,7 @@ object Par {
     * `SizeTracker`/`SizeEstimator`, whose object-graph sampling walks
     * were the TOP sampled frame of the checkpoint-heavy queries once
     * shuffle I/O was fixed (379/≈1100 runnable task samples on q73);
-    * serialized blocks have exact byte sizes (no estimation — and
-    * [[fanIn]]'s size gate reads true bytes instead of an estimate) and
+    * serialized blocks have exact byte sizes (no estimation) and
     * UnsafeRow payloads serialize as length+bytes. Measured on q73:
     * 17 → 19 runs per 20 s window.
     */
@@ -61,48 +60,5 @@ object Par {
     if (df.rdd.getNumPartitions < p)
       spark.createDataFrame(df.repartition(p).rdd, df.schema)
     else df
-  }
-
-  /** The symmetric CONSUMER-side repair: fan-IN an eagerly-materialized
-    * localCheckpoint cache whose partition count far exceeds what its
-    * BYTES need. A generated/over-partitioned input (e.g. a 256-part doc
-    * table at bench scale) leaves the cache as hundreds of sub-MB
-    * blocks, and every consumer scan then schedules hundreds of tasks
-    * whose fixed cost (scheduling, codegen init, broadcast-relation
-    * probe setup) dwarfs their data — measured on the salted KG
-    * pipeline's detect cache: the 512-task units stage fell 3.1 s →
-    * 0.44 s when its two consumer scans were coalesced to the session
-    * parallelism.
-    *
-    * Scale-adaptive by construction, never a local constant: the cache
-    * is ALREADY materialized when this runs, so its true stored size is
-    * known (block-manager storage info), and the target count is
-    * max(defaultParallelism, bytes / spark.sql.files.maxPartitionBytes)
-    * — the same per-task byte budget a parquet scan uses. At production
-    * scale bytes/maxPartitionBytes exceeds the observed count and this
-    * is the identity; it only fires when partitions carry LESS than a
-    * scan split's worth of data. `coalesce` is a narrow merge of cached
-    * blocks — no shuffle, no row movement across executors in local
-    * mode, and partition-count-insensitive consumers by the same
-    * contract as [[fanOut]]. Falls back to the identity when the plan
-    * is not a materialized-RDD scan (nothing to measure).
-    */
-  def fanIn(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val p = sc.defaultParallelism
-    val observed = df.rdd.getNumPartitions
-    if (observed <= p) return df
-    val bytes = df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }
-      .flatMap(id => sc.getRDDStorageInfo.find(_.id == id))
-      .map(i => i.memSize + i.diskSize)
-    bytes match {
-      case Some(b) if b > 0 =>
-        val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-        val want = math.max(p.toLong, (b + target - 1) / target)
-        if (want < observed) df.coalesce(want.toInt) else df
-      case _ => df
-    }
   }
 }

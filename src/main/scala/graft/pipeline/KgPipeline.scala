@@ -19,9 +19,14 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * Spark plan: sentence extraction, window packing, tagging and decoding
   * all live in a single mapPartitions stage (no shuffle — windows of a
   * sentence are produced and consumed in the same task, batched across
-  * sentences like the reference's DataLoader, data_processor.py:360);
-  * the only exchanges are the linking join (broadcast by default) and
-  * the per-doc cogroup that materializes triples.
+  * sentences like the reference's DataLoader, data_processor.py:360).
+  * Linking is a broadcast-map udf (`broadcastLink`, the default) or ONE
+  * left-outer join of every detect row — mentions, both relation
+  * endpoints, media — against the scored dictionary, whose physical
+  * form (broadcast-hash or shuffled) Spark picks from the table's size.
+  * Either way the detect output has one consumer, and the one keyed
+  * exchange the pipeline itself adds is the per-doc grouping that
+  * materializes triples.
   */
 object KgPipeline {
 
@@ -30,6 +35,9 @@ object KgPipeline {
       batchSize: Int = 256, // windows per tagger batch (webapp/config.json:2)
       sentBatch: Int = 64,  // sentences buffered per encode batch
       maxSeqLen: Int = 128, // Makefile:38
+      // salt fan-out of the hand-salted Linker joins; `run` does not
+      // read it (its salted path is one plain join, skew left to AQE) —
+      // only Linker helpers and the benchmark's link replay do
       saltBuckets: Int = 8,
       broadcastLink: Boolean = true,
       // store root for the snapshot-keyed scored-dictionary table
@@ -40,9 +48,9 @@ object KgPipeline {
       // snapshot relies on at scale
       dictStore: Option[String] = None,
       // opt-in CONTEXT-AWARE linking on the salted path: the mention ↔
-      // candidate join runs through Linker.linkContextualSalted — same
-      // salt/bloom machinery, candidate scoring gains the co-mention
-      // anchor feature between type match and prior. Output is
+      // candidate join runs through Linker.linkContextual — the same one
+      // join input, candidate scoring gains the co-mention anchor
+      // feature between type match and prior. Output is
       // identical to the prior-only path whenever no surface is
       // ambiguous after canonicalization (golden parity in
       // PipelineSpec); the candidate table is built inline per run
@@ -270,6 +278,9 @@ object KgPipeline {
     */
   case class LinkContext(dict: Map[String, Seq[Alias]],
                          canon: Map[String, String],
+                         // bloom bitset over the dictionary's surfaces, for
+                         // the bloom-pruned Linker joins and link replays;
+                         // `run` does not read it
                          bloomBits: Option[Array[Long]] = None,
                          dictSnapshotId: Option[String] = None,
                          // true for contexts built by prepareSaltedContext:
@@ -278,13 +289,13 @@ object KgPipeline {
                          // linking nothing
                          saltedOnly: Boolean = false)
 
-  /** Persisted row of the salted path's detect cache: EITHER a slim
-    * mention projection (surface_norm + join key + type — the minimum
-    * the salted link join consumes) OR an UNLINKED relation candidate
-    * (`rel` non-null) holding its normalized endpoint surfaces + types.
-    * Raw surfaces and word offsets never enter the cache; linking and
-    * canonicalization of BOTH families happen downstream in one
-    * distributed salted join — the salted path never touches a
+  /** One slim detect row of the salted path: a mention projection
+    * (surface_norm + join key + type — the minimum the link join
+    * consumes), an UNLINKED relation candidate (`rel` non-null) holding
+    * its normalized endpoint surfaces + types, or a media span
+    * (`media_ref` non-null). Raw surfaces and word offsets are dropped
+    * here; linking and canonicalization of every family happen in the
+    * one distributed join downstream — the salted path never touches a
     * driver-resident dictionary.
     */
   case class SaltedRow(doc_id: String, span_offset: Int, sentence_idx: Int,
@@ -317,7 +328,8 @@ object KgPipeline {
     * touches the driver — only the FIXED-SIZE bloom bitset (m/64 longs)
     * and the snapshot fingerprint. Ensures the scored dictionary is
     * materialized in `storeRoot` (one O(dictionary) build per snapshot)
-    * and derives the bloom bits from its surface column distributed.
+    * and derives the bloom bits from its surface column distributed
+    * (`run` reads only the fingerprint; the bits serve link replays).
     * This is the once-per-dictionary-snapshot setup every salted run /
     * streaming micro-batch shares — the amortized steady state (the
     * reference's warm-singleton pattern, webapp/app.py:126-149, applied
@@ -345,8 +357,8 @@ object KgPipeline {
           cfg: Config = Config(),
           ctx: Option[LinkContext] = None): Dataset[Triple] = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{array, coalesce, col, concat_ws, element_at, explode, lit, max, split, struct, udf, when}
-    import graft.kg.Triples.{DocUnit, SlimMention, SlimRelation}
+    import org.apache.spark.sql.functions.{array, coalesce, col, concat_ws, element_at, explode, lit, struct, udf, when}
+    import graft.kg.Triples.{DocUnit, SlimRelation}
     val inDocs = cfg.curate.map(c => curationKeep(spark, docs, c))
       .getOrElse(docs)
     // ONE doc pass: media spans ride the sentence stream as sentinels
@@ -425,15 +437,13 @@ object KgPipeline {
       } else {
         // salted path — the "dictionary does NOT fit in memory" regime:
         // NOTHING dictionary-sized ever reaches the driver. The fused
-        // detect stage runs ONCE and is persisted as a SLIM projection
-        // (normalized surfaces + join keys only); mentions AND relation
-        // endpoints are linked by ONE skew-defused salted join whose
-        // dictionary side is pre-scored and pre-canonicalized (the
-        // canonical map from distributed connected components joins the
-        // alias table at O(dictionary) cost before the corpus ever
-        // shuffles). If a prepared LinkContext is passed its bloom bits
-        // are reused; otherwise the bits come from one O(dictionary)
-        // aggregation.
+        // detect stage is read ONCE as a slim projection (normalized
+        // surfaces + join keys only) that feeds ONE join input: mention
+        // rows, both relation endpoints and media rows, through ONE
+        // left-outer join whose dictionary side is pre-scored and
+        // pre-canonicalized. Media rows carry a null surface, so they
+        // pass the join unmatched (a join per union branch would read
+        // the detect output once per branch).
         val slim = detectRows(spark, sents, new GazetteerTagger(gazetteer), cfg)
           .map { row =>
             if (row.media != null)
@@ -451,55 +461,7 @@ object KgPipeline {
                 CorpusGen.normSurface(r.obj_surface), r.obj_type)
             }
           }
-          // eager localCheckpoint, not persist: materializes ONCE before
-          // the consumers below (without a cut the union's branches race
-          // and recompute detect partitions) AND the blocks are released
-          // by the ContextCleaner when the dataset goes out of scope — a
-          // Dataset.persist entry would live in the cache manager until
-          // an explicit unpersist that no caller can sequence (run()
-          // returns a LAZY plan), leaking one cached detect projection
-          // per micro-batch on a long-running stream
-          .localCheckpoint(eager = true, graft.ops.Par.cutLevel)
-        // dictionary side: with a DictStore root the scored+canonicalized
-        // dictionary is READ from the snapshot-keyed table (built at most
-        // once per dictionary snapshot — the canon CC job and both
-        // scoring aggregations only run on a store miss); without one it
-        // is built inline per run (tests / one-shot jobs)
-        val (scoredOpt, canonOpt) = cfg.dictStore match {
-          case Some(storeRoot) =>
-            val snapId = ctx.flatMap(_.dictSnapshotId)
-              .getOrElse(graft.store.DictStore.fingerprint(spark, aliases))
-            val scored = graft.store.DictStore.ensureScored(spark, storeRoot,
-              snapId, aliases,
-              Some(graft.kg.ConnectedComponents.canonicalMap(spark, aliases.toDF())))
-            (Some(scored), None)
-          case None =>
-            (None, Some(graft.kg.ConnectedComponents
-              .canonicalMap(spark, aliases.toDF())))
-        }
-        // r8: consumer-side fan-in — the cache's partition count comes
-        // from the INPUT's partitioning (256 generated parts at bench
-        // scale → sub-MB blocks), and its two consumer scans below paid
-        // ~2.7 s of pure per-task fixed cost; size-gated coalesce from
-        // the materialized block sizes, identity at production scale
-        // (see [[graft.ops.Par.fanIn]]).
-        val cacheDF = graft.ops.Par.fanIn(slim.toDF())
-        // skew keys from a sample OF THE CACHE — a Zipf head survives
-        // heavy sampling. r8: the sample reads every 8th PARTITION
-        // instead of row-sampling the full cache (a row sample still
-        // scans every block; the partition subset never touches the
-        // skipped blocks — measured ~0.4 s of the salted run), and it
-        // reads the COALESCED cache so the sample job schedules
-        // parallelism-many tasks, not one per raw block. Skew keys
-        // only steer salting, which is result-invariant (LinkerSpec),
-        // so a coarser head estimate cannot change output.
-        val skewSrc = spark.createDataFrame(
-          cacheDF.rdd.mapPartitionsWithIndex(
-            (i, it) => if (i % 8 == 0) it else Iterator.empty),
-          cacheDF.schema)
-        val skew = Linker.inferSkewKeysNorm(spark,
-          skewSrc.where(col("rel").isNull && col("media_ref").isNull)
-            .select("surface_norm"), sampleFraction = 0.08)
+          .toDF()
         // the full candidate tuple packed into ONE carry column: the
         // shuffle row of every MENTION (the overwhelming majority) pays
         // one null slot instead of five. \u0001 cannot occur in a
@@ -513,98 +475,75 @@ object KgPipeline {
         def packed(c: String) = coalesce(col(c), lit("\u0002"))
         val relKey = concat_ws("\u0001", packed("rel"), packed("subj_norm"),
           packed("subj_type"), packed("obj_norm"), packed("obj_type"))
-        // one join input: mention rows + BOTH relation endpoints, each
-        // endpoint row carrying the packed candidate tuple so the pair
-        // re-assembles by grouping on it (identical duplicate candidates
-        // merge harmlessly — triple assembly dedups anyway).
-        // r8: built as ONE explode over a single cache scan — the
-        // previous three-branch union scanned the (corpus-sized) detect
-        // cache once per branch (measured 2×136 MB of cache reads in
-        // the join stage alone); per-row fan-out is 1 (mention) or 2
-        // (endpoints), identical rows out.
+        // one explode over the slim rows: fan-out is 1 (mention, media)
+        // or 2 (relation endpoints, each carrying the packed candidate
+        // tuple so the pair re-assembles per doc in Triples.buildUnits)
+        val noStr = lit(null).cast("string")
         def fld(role: String, surf: org.apache.spark.sql.Column,
                 typ: org.apache.spark.sql.Column,
                 rk: org.apache.spark.sql.Column) = struct(
           col("doc_id"), col("span_offset"), col("sentence_idx"),
           surf.as("surface_norm"), typ.as("entity_type"),
-          lit(role).as("role"), rk.as("rel_key"))
-        val joinIn = cacheDF.where(col("media_ref").isNull)
-          .select(explode(when(col("rel").isNull,
-              array(fld("m", col("surface_norm"), col("entity_type"),
-                lit(null).cast("string"))))
+          lit(role).as("role"), rk.as("rel_key"), col("media_ref"))
+        val joinIn = slim
+          .select(explode(
+            when(col("media_ref").isNotNull,
+              array(fld("md", noStr, noStr, noStr)))
+            .when(col("rel").isNull,
+              array(fld("m", col("surface_norm"), col("entity_type"), noStr)))
             .otherwise(array(
               fld("s", col("subj_norm"), col("subj_type"), relKey),
               fld("o", col("obj_norm"), col("obj_type"), relKey)))).as("u"))
-          .select(col("u.doc_id").as("doc_id"),
-            col("u.span_offset").as("span_offset"),
-            col("u.sentence_idx").as("sentence_idx"),
-            col("u.surface_norm").as("surface_norm"),
-            col("u.entity_type").as("entity_type"),
-            col("u.role").as("role"), col("u.rel_key").as("rel_key"))
+          .select("u.*")
+        // keep media rows and every row that found a candidate: for
+        // mentions and endpoints that is the inner join's result, so an
+        // unlinked endpoint still drops its relation candidate
+        val isMedia = col("role") === "md"
+        def canon = ConnectedComponents.canonicalMap(spark, aliases.toDF())
         val linked =
-          if (cfg.contextualLink) {
-            // contextual needs the raw candidate lists + the canon map
-            // (the scored table pre-collapses candidates); endpoints are
-            // genuine doc mentions, so they both contribute to and
-            // benefit from the anchor set
-            val canonCtx = canonOpt.getOrElse(graft.kg.ConnectedComponents
-              .canonicalMap(spark, aliases.toDF()))
-            Linker.linkContextualSalted(spark, joinIn, aliases,
-                cfg.saltBuckets, Some(skew),
-                bloomBits = ctx.flatMap(_.bloomBits), canon = Some(canonCtx))
-              .drop("ctx_hit")
-          } else Linker.linkSaltedCarry(spark, joinIn, aliases,
-            cfg.saltBuckets, Some(skew), bloomBits = ctx.flatMap(_.bloomBits),
-            canon = canonOpt, scored = scoredOpt)
-        // ONE pass over the link output (r8): mention rows become
-        // mention units directly; relation ENDPOINTS ride the same
-        // doc-keyed grouping as slim endpoint units and are re-paired
-        // INSIDE the per-doc group by [[Triples.buildUnits]] — the
-        // re-pairing key (doc, span, sentence, rel_key) is doc-local,
-        // so the previous corpus-wide rUnits groupBy exchange AND the
-        // second evaluation of the whole link join (one per consumer —
-        // measured: the join stage scanned the detect cache twice)
-        // both disappear. Semantics unchanged: an unlinked endpoint
-        // (dropped by the inner join) still drops its candidate, and
-        // the per-key max-entity merge replays the old
-        // max(when(role…)) aggregate exactly (UTF8-binary max like
-        // Spark's — [[Triples.pairEndpoints]]).
-        // r8: COLUMNAR DocUnit construction — `when`/`struct` selects
-        // whose field names mirror the case classes, so the rows reach
-        // the doc-keyed exchange straight from whole-stage codegen. The
-        // previous typed `.map` closures paid a full decode-construct-
-        // encode object pass per row (measured: part of the one big
-        // 512-task stage that dominates the salted run).
-        val rNull = lit(null)
-          .cast(org.apache.spark.sql.Encoders.product[SlimRelation].schema)
-        val linkedUnits = linked.select(
+          if (cfg.contextualLink)
+            Linker.linkContextual(spark, joinIn, aliases, Some(canon),
+              keep = Some(isMedia))
+          else {
+            // the scored dictionary: READ from the snapshot-keyed
+            // DictStore table (built at most once per dictionary
+            // snapshot) or built inline per run (tests / one-shot jobs).
+            // No join hint: Spark broadcasts it when it is small and
+            // shuffles otherwise, where AQE's skew-join split takes the
+            // hot surfaces (left-outer splits the left side)
+            val scored = cfg.dictStore match {
+              case Some(storeRoot) =>
+                val snapId = ctx.flatMap(_.dictSnapshotId)
+                  .getOrElse(graft.store.DictStore.fingerprint(spark, aliases))
+                graft.store.DictStore.ensureScored(spark, storeRoot, snapId,
+                  aliases, Some(canon))
+              case None => Linker.scoredDict(spark, aliases, Some(canon))
+            }
+            val picked = coalesce(
+              element_at(col("by_type"), col("entity_type")), col("any_best"))
+            joinIn.join(scored, Seq("surface_norm"), "left_outer")
+              .where(isMedia || col("any_best").isNotNull)
+              .select(joinIn.columns.map(col).toIndexedSeq :+
+                picked.getField("entity_id").as("entity_id") :+
+                picked.getField("prior").as("conf"): _*)
+          }
+        // COLUMNAR DocUnit construction — `when`/`struct` selects whose
+        // field names mirror the case classes, so the rows reach the
+        // doc-keyed exchange straight from whole-stage codegen; endpoint
+        // units are re-paired INSIDE the per-doc group by
+        // [[Triples.buildUnits]] (the re-pairing key is doc-local)
+        linked.select(
           col("doc_id"),
           when(col("role") === "m",
             struct(col("span_offset"), col("sentence_idx"),
               col("entity_id"), col("conf"))).as("m"),
-          rNull.as("r"),
-          lit(null)
-            .cast(org.apache.spark.sql.Encoders
-              .product[Triples.SlimMedia].schema).as("md"),
-          when(col("role") =!= "m",
+          lit(null).cast(org.apache.spark.sql.Encoders
+            .product[SlimRelation].schema).as("r"),
+          when(isMedia, struct(col("span_offset"), col("media_ref"))).as("md"),
+          when(col("role").isin("s", "o"),
             struct(col("span_offset"), col("sentence_idx"), col("role"),
               col("rel_key"), col("entity_id"))).as("ep"))
           .as[DocUnit]
-        // media rows come straight off the detect cache — no link join,
-        // no second doc scan
-        val mediaUnits = cacheDF.where(col("media_ref").isNotNull)
-          .select(
-            col("doc_id"),
-            lit(null)
-              .cast(org.apache.spark.sql.Encoders
-                .product[SlimMention].schema).as("m"),
-            rNull.as("r"),
-            struct(col("span_offset"), col("media_ref")).as("md"),
-            lit(null)
-              .cast(org.apache.spark.sql.Encoders
-                .product[Triples.SlimEndpoint].schema).as("ep"))
-          .as[DocUnit]
-        linkedUnits.unionByName(mediaUnits)
       }
     Triples.buildUnits(spark, units, cfg.buckets)
   }

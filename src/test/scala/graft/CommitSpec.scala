@@ -126,6 +126,19 @@ class CommitSpec extends AnyFunSuite {
     assert(resumeJobs == 1, s"$resumeJobs jobs for a no-op resume")
   }
 
+  test("a fresh salted build runs 5 Spark jobs") {
+    val docs = CorpusGen.docs(spark, 80, parts = 4)
+    // the context is prepared before counting, as a caller reuses it
+    val pipe = saltedPipe(tmp("graft_commit_salted_dict"))
+    val root = tmp("graft_commit_salted_jobs")
+    val (n, jobs) = jobsOf {
+      LineageStore.runResumable(spark, root, "triples", docs, pipe,
+        buckets, "snap")
+    }
+    assert(n == buckets)
+    assert(jobs == 5, s"$jobs jobs for one build")
+  }
+
   /** The plan nodes `p` runs, looking through adaptive plans and their
     * query stages. */
   private def children(p: SparkPlan): Seq[SparkPlan] = p match {

@@ -109,18 +109,68 @@ class PipelineSpec extends AnyFunSuite {
     assert(!withBloom.exists(_._1.startsWith("dx")))
   }
 
-  test("full salted pipeline (slim persist) equals the broadcast pipeline") {
+  test("full salted pipeline equals the broadcast pipeline") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
     val docs = CorpusGen.docs(spark, N, parts = 4)
-    val aliases = CorpusGen.aliases(spark)
-    val ctx = Some(KgPipeline.prepareLinkContext(spark, aliases))
-    def rows(cfg: KgPipeline.Config) =
-      KgPipeline.run(spark, docs, aliases, cfg = cfg, ctx = ctx)
-        .map(t => (t.subj, t.pred, t.obj, t.doc_id, t.conf,
-          t.span_offset, t.sentence_idx)).collect().toSet
-    val viaBroadcast = rows(KgPipeline.Config())
-    val viaSalted = rows(KgPipeline.Config(broadcastLink = false))
-    assert(viaBroadcast == viaSalted && viaSalted.nonEmpty)
-    spark.catalog.clearCache()
+    val full = CorpusGen.aliases(spark)
+    // an alias table without the head location and one person's full
+    // name: the gazetteer still detects those surfaces, so mentions and
+    // relation endpoints of them reach the link and fail it on both paths
+    val dropped = Seq(CorpusGen.locations.head, CorpusGen.persons.head)
+      .map(e => CorpusGen.normSurface(e._2.mkString(" "))).toSet
+    val partial = full.filter(a => !dropped.contains(a.surface_norm))
+    def oov(s: String) = dropped.contains(CorpusGen.normSurface(s))
+    val detected = KgPipeline.detectRows(spark, KgPipeline.sentences(spark, docs),
+      new GazetteerTagger(KgPipeline.defaultGazetteer)).collect()
+    assert(detected.exists(r => r.mention != null && oov(r.mention.surface)))
+    assert(detected.exists(r => r.relation != null &&
+      (oov(r.relation.subj_surface) || oov(r.relation.obj_surface))))
+    def rows(ds: org.apache.spark.sql.Dataset[Triple]) = ds.collect()
+      .map(t => (t.subj, t.pred, t.obj, t.doc_id, t.conf,
+        t.span_offset, t.sentence_idx)).toSet
+    def run(aliases: org.apache.spark.sql.Dataset[Alias],
+            cfg: KgPipeline.Config) =
+      KgPipeline.run(spark, docs, aliases, cfg = cfg,
+        ctx = Some(KgPipeline.prepareLinkContext(spark, aliases)))
+    val salted = KgPipeline.Config(broadcastLink = false)
+    val want = Seq(full, partial).map { aliases =>
+      val viaBroadcast = rows(run(aliases, KgPipeline.Config()))
+      assert(rows(run(aliases, salted)) == viaBroadcast && viaBroadcast.nonEmpty)
+      viaBroadcast
+    }
+    assert(want(1).size < want(0).size)
+    // a shuffled link join over a DictStore snapshot (an inline scored
+    // table arrives already partitioned by its aggregation, so only the
+    // detect side would shuffle), with skew thresholds low enough that
+    // AQE splits the left side's large partitions
+    val confs = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val ds = KgPipeline.run(spark, docs, partial, cfg = salted.copy(dictStore =
+        Some(java.nio.file.Files.createTempDirectory("graft_skew_dict").toString)))
+      assert(rows(ds) == want(1))
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case other => other.children
+      }).flatMap(nodes)
+      val plan = ds.queryExecution.executedPlan
+      assert(nodes(plan).exists {
+        case j: SortMergeJoinExec => j.isSkewJoin
+        case j: ShuffledHashJoinExec => j.isSkewJoin
+        case _ => false
+      }, plan)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("raw-text ingestion: splitter sentences feed the same detect stage") {

@@ -63,6 +63,24 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("salt"), plan)
   }
 
+  test("salted KG run: one left-outer link join, no salt column, one doc-keyed exchange") {
+    import graft.pipeline.KgPipeline
+    val root = java.nio.file.Files.createTempDirectory("graft_plan_salted").toString
+    val aliases = graft.gen.CorpusGen.aliases(spark)
+    val ctx = KgPipeline.prepareSaltedContext(spark, aliases, root)
+    val df = KgPipeline.run(spark, graft.gen.CorpusGen.docs(spark, 40, parts = 2),
+      aliases, cfg = KgPipeline.Config(broadcastLink = false,
+        dictStore = Some(root)), ctx = Some(ctx))
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==")(0)
+    // the scored table is broadcast: its join is the plan's only one
+    assert("Join".r.findAllIn(p).length == 1 &&
+      "BroadcastHashJoin .*LeftOuter".r.findFirstIn(p).isDefined, p)
+    assert("\\bsalt#\\d+".r.findFirstIn(p).isEmpty, p)
+    assert("Exchange hashpartitioning\\(doc_id#".r.findAllIn(p).length == 1, p)
+  }
+
   test("bm25: query-term and stats sides broadcast, never shuffled") {
     val p = planOf("q87_bm25")
     // the corpus-sized posting list joins dictionary-sized sides only

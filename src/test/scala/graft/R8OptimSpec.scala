@@ -25,22 +25,6 @@ class R8OptimSpec extends AnyFunSuite {
     assert(fanned.as[Long].collect().sorted.toSeq == (0L until 100L))
   }
 
-  test("Par.fanIn: size-gated coalesce of an over-partitioned checkpoint; identity otherwise") {
-    import spark.implicits._
-    val p = spark.sparkContext.defaultParallelism
-    // tiny bytes spread over p*8 checkpointed partitions → coalesce to p
-    val many = spark.range(0, 1000, 1, p * 8).toDF("id").localCheckpoint()
-    val in = graft.ops.Par.fanIn(many)
-    assert(in.rdd.getNumPartitions == p)
-    assert(in.as[Long].collect().sorted.toSeq == (0L until 1000L))
-    // at/below parallelism: identity (no new plan)
-    val small = spark.range(0, 100, 1, p).toDF("id").localCheckpoint()
-    assert(graft.ops.Par.fanIn(small) eq small)
-    // not a materialized cache (nothing to size) → identity
-    val plain = spark.range(0, 100, 1, p * 8).toDF("id")
-    assert(graft.ops.Par.fanIn(plain) eq plain)
-  }
-
   test("single-stream buildUnits == cogroup buildUnits (mentions+media), endpoints pair per doc") {
     import spark.implicits._
     val ms = Seq(

@@ -94,32 +94,6 @@ object DumpPlans {
       sb.append(stable(linked.queryExecution.executedPlan.toString))
       sb.append("```\n")
     }
-    // the salted CONTEXTUAL link past the broadcast threshold: the
-    // mention ↔ candidate join shuffles on (surface_norm, salt) — the
-    // Zipf head replicated dictionary-side — while the anchor
-    // aggregation stays doc-keyed (parity with linkContextual asserted
-    // in LinkerCtxSpec)
-    locally {
-      import org.apache.spark.sql.functions._
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // try/finally (ADVICE r7): an exception during collect() would
-      // otherwise leave broadcasts disabled for every LATER plan dump in
-      // this run, silently changing the plans the audit records
-      try {
-        val neu = gen.CorpusGen.normSurface("Neustadt")
-        val m = spark.range(200).selectExpr("CONCAT('d', id % 40) AS doc_id",
-          "CAST(id % 7 AS INT) AS span_offset", "0 AS sentence_idx",
-          s"'$neu' AS surface_norm", "'LOC' AS entity_type")
-        val linked = kg.Linker.linkContextualSalted(spark, m,
-          gen.CorpusGen.ctxAliases(spark), saltBuckets = 4,
-          skewKeys = Some(Seq(neu)))
-        linked.collect()
-        sb.append("\n## salted contextual link, broadcast disabled (shuffle keys = surface_norm + salt)\n\n```\n")
-        sb.append(stable(linked.queryExecution.executedPlan.toString))
-        sb.append("```\n")
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    }
     // the runtime-injected deterministic Bloom filter (optimizer rule,
     // extensions session): q04's semi-join shape gains a probe-side
     // filter of h60 probes against a scalar-subquery bitset

@@ -952,7 +952,10 @@ object SparkEntry {
       // both consume the detect stage — without the cache it runs twice
       val mentions = KgPipeline.detectMentions(s, sents,
         new graft.tag.GazetteerTagger(KgPipeline.defaultGazetteer)).persist()
+      // one row per distinct mention key, as the golden: the join emits
+      // one per occurrence, and a sentence can name a person twice
       graft.kg.Linker.linkSaltedJoin(s, mentions, CorpusGen.aliases(s)).toDF()
+        .distinct()
         .orderBy("doc_id", "span_offset", "surface")
     }),
     // ---- salted pipeline over the snapshot-keyed DictStore: the

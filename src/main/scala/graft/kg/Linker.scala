@@ -7,12 +7,13 @@ import org.apache.spark.sql.functions._
 
 /** Entity linking: mention surface → entity record.
   *
-  * Three physical forms of the same logical join (SURVEY.md §2.4):
+  * One logical join (SURVEY.md §2.4) in these forms:
   *
   *  - [[linkBroadcast]]: the alias dictionary fits in memory → broadcast
   *    map lookup inside a typed map (a dictionary join, like the
   *    reference's label/vocab lookups, data_processor.py:428). Zero
-  *    shuffle; `KgPipeline`'s broadcast path does the same lookup.
+  *    shuffle; `KgPipeline`'s broadcast path does the same lookup, and
+  *    the tests use it as the reference.
   *
   *  - [[scoredDict]] joined plainly: `KgPipeline`'s salted path joins
   *    its mention rows ONCE against the scored dictionary, with no
@@ -20,15 +21,22 @@ import org.apache.spark.sql.functions._
   *    under the broadcast threshold and a shuffled one past it, where
   *    AQE's skew-join split takes the head-entity skew.
   *
-  *  - [[linkSaltedJoin]] / [[linkSaltedCarry]]: shuffle hash join with
-  *    hand SALTING of head-entity skew (Zipfian surfaces mean a handful
-  *    of keys carry most mentions): the dictionary side is replicated
-  *    S× with a salt column, the mention side draws
+  *  - [[linkSaltedCarry]] (and [[linkSaltedJoin]], its `Mention`-typed
+  *    form): the same scored dictionary, joined with hand SALTING of
+  *    head-entity skew (Zipfian surfaces mean a handful of keys carry
+  *    most mentions): the dictionary rows of head surfaces are
+  *    replicated S× with a salt column, the mention side draws
   *    `pmod(hash(doc_id), S)`, and the join key becomes
   *    (surface_norm, salt). Used by query entries and link replays.
   *
+  *  - [[linkContextual]]: the co-mention re-ranking of the
+  *    `q102_ctx_linking` query.
+  *
   * Candidate scoring picks type match, then max prior, then min
-  * entity_id — one min_by aggregation over a struct key, no window.
+  * entity_id: [[bestCandidate]] on the broadcast side, and the
+  * dictionary-side `min_by` aggregations of [[scoredDict]] for the
+  * plain and salted joins — the corpus is never regrouped to rank
+  * candidates. [[linkContextual]] adds its context slot to that order.
   */
 object Linker {
 
@@ -53,31 +61,6 @@ object Linker {
     }
   }
 
-  /** Skewed surface keys: sampled mention-frequency heads. At 100 TB this
-    * is a CHEAP SAMPLE + count over the mention stream (never a full
-    * corpus-sized aggregation — skew keys are an optimization hint, and a
-    * Zipf head survives heavy sampling); the head is tiny (tens of keys)
-    * and broadcast as a literal set.
-    */
-  def inferSkewKeys(spark: SparkSession, mentions: Dataset[Mention],
-                    topK: Int = 20, sampleFraction: Double = 0.01): Seq[String] = {
-    NormalizeSurface.register(spark)
-    val m = if (sampleFraction < 1.0) mentions.sample(sampleFraction, 42) else mentions
-    m.toDF()
-      .groupBy(NormalizeSurface(col("surface")).as("surface_norm"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("surface_norm")).limit(topK)
-      .collect().map(_.getString(0)).toSeq
-  }
-
-  /** Shared salted-join core over a mention-side DataFrame that already
-    * carries `surface_norm` plus the caller's group columns. SKEW-AWARE:
-    * only head surfaces (Zipf skew) get salted — the dictionary rows of
-    * skewed keys are replicated S×, everything else joins unreplicated on
-    * salt 0. Candidate scoring: prefer type match, then max prior, then
-    * min id — one min_by aggregation over a lexicographic key struct (no
-    * window).
-    */
   /** Empty-skew-head sentinel: keeps the literal array expression
     * well-typed; the NUL escape can never be a normalized surface, so
     * `array_contains` is vacuously false. (Salting is result-invariant
@@ -110,92 +93,28 @@ object Linker {
           .otherwise(array(lit(0))))
       .withColumn("salt", explode(col("salts"))).drop("salts")
 
-  private def saltedBest(m: DataFrame, aliases: Dataset[Alias],
-                         saltBuckets: Int, skew: Seq[String],
-                         groupCols: Seq[String]): DataFrame = {
-    val skewArr = skewArray(skew)
-    val salted = m.withColumn("salt", mentionSalt(skewArr, saltBuckets))
-    val a = explodeSalts(
-      aliases.withColumnRenamed("entity_type", "alias_type").toDF(),
-      skewArr, saltBuckets)
-    salted.join(a, Seq("surface_norm", "salt"), "inner")
-      .groupBy(groupCols.map(col): _*)
-      .agg(min_by(
-        struct(col("entity_id"), col("prior")),
-        struct(
-          when(col("alias_type") === col("entity_type"), lit(0)).otherwise(lit(1)),
-          negate(col("prior")),
-          col("entity_id"))).as("best"))
-  }
-
-  /** DataFrame salted-join path for dictionaries beyond broadcast size.
-    * Surface normalization runs through the native codegen expression
-    * [[NormalizeSurfaceExpr]] so the mention side never leaves
-    * whole-stage codegen.
+  /** [[linkSaltedCarry]] over `Mention` rows, for dictionaries beyond
+    * broadcast size: the surface is normalized through the native
+    * codegen expression [[NormalizeSurfaceExpr]] (the mention side never
+    * leaves whole-stage codegen), and the join runs without bloom prune
+    * or canonicalization. One row per linked mention occurrence — the
+    * ranking is the scored dictionary's, so nothing regroups the
+    * mentions after the join.
     */
   def linkSaltedJoin(spark: SparkSession, mentions: Dataset[Mention],
                      aliases: Dataset[Alias], saltBuckets: Int = 8,
                      skewKeys: Option[Seq[String]] = None): Dataset[LinkedMention] = {
     import spark.implicits._
     NormalizeSurface.register(spark)
-    val skew = skewKeys.getOrElse(inferSkewKeys(spark, mentions))
     val m = mentions.toDF()
       .withColumn("surface_norm", NormalizeSurface(col("surface")))
-    saltedBest(m, aliases, saltBuckets, skew,
-        Seq("doc_id", "span_offset", "sentence_idx", "surface", "entity_type"))
+    linkSaltedCarry(spark, m, aliases, saltBuckets, skewKeys,
+        bloomPrune = false, canon = None)
       .select(col("doc_id"), col("span_offset"), col("sentence_idx"),
-        col("surface"), col("entity_type"),
-        col("best.entity_id").as("entity_id"), col("best.prior").as("conf"))
+        col("surface"), col("entity_type"), col("entity_id"), col("conf"))
       .as[LinkedMention]
   }
 
-  /** A linked mention slimmed to what triple assembly consumes. */
-  case class SlimLinked(doc_id: String, span_offset: Int, sentence_idx: Int,
-                        entity_id: String, conf: Double)
-
-  /** Slim salted-join for the pipeline: the mention side is a
-    * pre-normalized projection (doc_id, span_offset, sentence_idx,
-    * surface_norm, entity_type) — no original surface, no word offsets —
-    * the minimum payload the linking join needs.
-    *
-    * Candidate scoring is precomputed ON THE DICTIONARY SIDE: per
-    * surface, the best alias per type plus the type-agnostic fallback
-    * (an O(dictionary) aggregation, independent of the corpus). The
-    * mention-side link is then a pure join + map lookup — the corpus is
-    * NEVER re-shuffled on a wide mention key for scoring (the previous
-    * form aggregated every mention row post-join). Output is one row per
-    * mention OCCURRENCE (not per distinct key) — equivalent for triple
-    * assembly, which dedups per (doc, entity) and takes max conf / first
-    * occurrence anyway.
-    */
-  def linkSaltedSlim(spark: SparkSession, m: DataFrame,
-                     aliases: Dataset[Alias], saltBuckets: Int = 8,
-                     skewKeys: Option[Seq[String]] = None,
-                     bloomPrune: Boolean = true,
-                     bloomBits: Option[Array[Long]] = None): Dataset[SlimLinked] = {
-    import spark.implicits._
-    linkSaltedCarry(spark, m, aliases, saltBuckets, skewKeys, bloomPrune,
-        bloomBits, canon = None)
-      .select(col("doc_id"), col("span_offset"), col("sentence_idx"),
-        col("entity_id"), col("conf"))
-      .as[SlimLinked]
-  }
-
-  /** Carry-through form of the salted link join: every column of `m`
-    * passes through unchanged and gains `entity_id` + `conf` — callers
-    * tag provenance columns (e.g. mention vs relation-endpoint role) and
-    * re-split after the join. With `canon` (the distributed
-    * (entity_id, canonical_id) map from
-    * [[ConnectedComponents.canonicalMap]]) the emitted ids are already
-    * canonical: the map is folded into the DICTIONARY side before the
-    * per-surface best aggregation — an O(dictionary) join, so
-    * canonicalization costs ZERO corpus-sized shuffles and the driver
-    * never materializes the dictionary or the canon map (the 100 TB
-    * contract of the no-broadcast regime). Candidate ordering (type
-    * match, max prior, min id) stays on the RAW alias id so tie-breaks
-    * are identical to the broadcast path, which also orders raw then
-    * canonicalizes the winner.
-    */
   /** Incremented per from-scratch [[scoredDict]] build — lets tests (and
     * the streaming micro-batch spec) assert the scored dictionary is
     * REUSED from the store rather than recomputed per run.
@@ -245,6 +164,21 @@ object Linker {
         min_by(col("best_t"), ord).as("any_best"))
   }
 
+  /** Carry-through form of the salted link join: every column of `m`
+    * passes through unchanged and gains `entity_id` + `conf` — callers
+    * tag provenance columns (e.g. mention vs relation-endpoint role) and
+    * re-split after the join. With `canon` (the distributed
+    * (entity_id, canonical_id) map from
+    * [[ConnectedComponents.canonicalMap]]) the emitted ids are already
+    * canonical: the map is folded into the DICTIONARY side before the
+    * per-surface best aggregation — an O(dictionary) join, so
+    * canonicalization costs ZERO corpus-sized shuffles and the driver
+    * never materializes the dictionary or the canon map (the 100 TB
+    * contract of the no-broadcast regime). Candidate ordering (type
+    * match, max prior, min id) stays on the RAW alias id so tie-breaks
+    * are identical to the broadcast path, which also orders raw then
+    * canonicalizes the winner.
+    */
   def linkSaltedCarry(spark: SparkSession, m: DataFrame,
                       aliases: Dataset[Alias], saltBuckets: Int = 8,
                       skewKeys: Option[Seq[String]] = None,
@@ -312,37 +246,55 @@ object Linker {
     * Scale shape (the 100 TB contract): the candidate table is an
     * O(dictionary) aggregation (one array row per surface, fan-out
     * bounded by candidates-per-surface — dictionary-shaped, never
-    * corpus²); the mention side pays ONE surface-keyed join (salt/bloom
-    * composable exactly like [[linkSaltedCarry]]) and one doc-keyed
-    * window over the already-joined mentions for the anchor set. Best-
-    * candidate selection is a per-row `aggregate` higher-order function
-    * over the carried array — no re-shuffle on a wide mention key.
+    * corpus²); the mention side pays ONE surface-keyed join and one
+    * doc-keyed window over the already-joined mentions for the anchor
+    * set (the joined rows are read once, not once for an anchor
+    * aggregation and again for its join-back). Best-candidate selection
+    * is a per-row `aggregate` higher-order function over the carried
+    * array — no re-shuffle on a wide mention key.
     *
     * `m` carries (doc_id, span_offset, sentence_idx, surface_norm,
     * entity_type); output adds (entity_id, conf, ctx_hit 1/0). A row
     * without a candidate drops (OOV — same semantics as every other
-    * link path) unless it matches `keep`, in which case it passes
-    * through with a null `entity_id` (the pipeline's media rows).
+    * link path).
     */
   def linkContextual(spark: SparkSession, m: DataFrame,
                      aliases: Dataset[Alias],
-                     canon: Option[DataFrame] = None,
-                     keep: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val cands = ctxCandidates(aliases, canon)
-    val joined = keep match {
-      case None => m.join(cands, Seq("surface_norm"))
-      case Some(k) => m.join(cands, Seq("surface_norm"), "left_outer")
-        .where(k || col("cands").isNotNull)
-    }
-    ctxPick(joined, m.columns.toIndexedSeq)
+                     canon: Option[DataFrame] = None): DataFrame = {
+    val joined = m.join(ctxCandidates(aliases, canon), Seq("surface_norm"))
+    // n_ents == 1 ⇒ every candidate row shares one out_id; collect_set
+    // skips the nulls of ambiguous rows
+    val anchorId = when(col("n_ents") === 1,
+      element_at(col("cands"), 1).getField("entity_id"))
+    val ctx = joined.withColumn("anchors", collect_set(anchorId)
+      .over(org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
+    // lexicographic candidate key: (type mismatch, context miss,
+    // -prior, raw id) — struct comparison gives the total order; the
+    // prior-only key is the same struct minus the context slot, so
+    // absent context degenerates to it exactly
+    def key(c: org.apache.spark.sql.Column) = struct(
+      when(c.getField("alias_type") === col("entity_type"), lit(0))
+        .otherwise(lit(1)),
+      when(array_contains(col("anchors"), c.getField("entity_id")), lit(0))
+        .otherwise(lit(1)),
+      negate(c.getField("prior")),
+      c.getField("raw_id"))
+    val picked = ctx.withColumn("best",
+      aggregate(col("cands"), element_at(col("cands"), 1),
+        (acc, x) => when(key(x) < key(acc), x).otherwise(acc)))
+    picked.select(m.columns.map(col).toIndexedSeq :+
+      col("best").getField("entity_id").as("entity_id") :+
+      col("best").getField("prior").as("conf") :+
+      when(array_contains(col("anchors"),
+        col("best").getField("entity_id")), lit(1L)).otherwise(lit(0L))
+        .as("ctx_hit"): _*)
   }
 
-  /** The dictionary side of contextual linking: one array row per
+  /** The dictionary side of [[linkContextual]]: one array row per
     * surface — every candidate (canonicalized `entity_id`, the raw id
     * for tie-breaks, prior, declared type) plus the canonical-entity
     * ambiguity count (n_ents == 1 ⇒ mentions of this surface anchor).
-    * O(dictionary); shared by [[linkContextual]] and
-    * [[linkContextualSalted]].
+    * O(dictionary).
     */
   private def ctxCandidates(aliases: Dataset[Alias],
                             canon: Option[DataFrame]): DataFrame = {
@@ -363,85 +315,13 @@ object Linker {
         countDistinct(col("out_id")).as("n_ents"))
   }
 
-  /** The doc-coherence selection over an already-joined m ⋈ candidates
-    * frame: the doc's anchor set as a doc-keyed window (the joined rows
-    * are read once, not once for an anchor aggregation and again for
-    * its join-back), and the per-row lexicographic best-candidate fold.
-    * Identical for the plain and salted join shapes — only the join
-    * above differs.
+  /** Skewed surface keys of a pre-normalized mention projection: the
+    * sampled mention-frequency heads. At 100 TB this is a CHEAP SAMPLE +
+    * count over the mention stream (never a full corpus-sized
+    * aggregation — skew keys are an optimization hint, and a Zipf head
+    * survives heavy sampling); the head is tiny (tens of keys) and
+    * broadcast as a literal set.
     */
-  private def ctxPick(joined: DataFrame, mCols: Seq[String]): DataFrame = {
-    // n_ents == 1 ⇒ every candidate row shares one out_id; collect_set
-    // skips the nulls of ambiguous and unmatched rows
-    val anchorId = when(col("n_ents") === 1,
-      element_at(col("cands"), 1).getField("entity_id"))
-    val ctx = joined.withColumn("anchors", collect_set(anchorId)
-      .over(org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
-    // lexicographic candidate key: (type mismatch, context miss,
-    // -prior, raw id) — struct comparison gives the total order; the
-    // prior-only key is the same struct minus the context slot, so
-    // absent context degenerates to it exactly
-    def key(c: org.apache.spark.sql.Column) = struct(
-      when(c.getField("alias_type") === col("entity_type"), lit(0))
-        .otherwise(lit(1)),
-      when(array_contains(col("anchors"), c.getField("entity_id")), lit(0))
-        .otherwise(lit(1)),
-      negate(c.getField("prior")),
-      c.getField("raw_id"))
-    val picked = ctx.withColumn("best",
-      aggregate(col("cands"), element_at(col("cands"), 1),
-        (acc, x) => when(key(x) < key(acc), x).otherwise(acc)))
-    picked.select(mCols.map(col).toIndexedSeq :+
-      col("best").getField("entity_id").as("entity_id") :+
-      col("best").getField("prior").as("conf") :+
-      when(array_contains(col("anchors"),
-        col("best").getField("entity_id")), lit(1L)).otherwise(lit(0L))
-        .as("ctx_hit"): _*)
-  }
-
-  /** [[linkContextual]] routed through the salted-join machinery — the
-    * past-broadcast-threshold regime: the candidate table's head
-    * surfaces (Zipf skew) are replicated `saltBuckets`× exactly like
-    * [[linkSaltedCarry]]'s scored dictionary ([[explodeSalts]] /
-    * [[mentionSalt]] — one code path, they cannot drift), and the bloom
-    * prune keeps OOV mentions out of the shuffle. The anchor window
-    * and the best-candidate fold are untouched ([[ctxPick]]): the
-    * anchors stay doc-keyed, so the context feature costs one doc-keyed
-    * shuffle beyond the salted surface join itself. Result-identical to [[linkContextual]]
-    * (each mention row draws exactly one salt and the dictionary side
-    * carries that salt for its surface — parity asserted in
-    * LinkerCtxSpec; salt keys in the shuffle plan asserted in PlanSpec).
-    */
-  def linkContextualSalted(spark: SparkSession, m: DataFrame,
-                           aliases: Dataset[Alias], saltBuckets: Int = 8,
-                           skewKeys: Option[Seq[String]] = None,
-                           bloomPrune: Boolean = true,
-                           bloomBits: Option[Array[Long]] = None,
-                           canon: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val mIn =
-      if (!bloomPrune) m
-      else bloomBits match {
-        case Some(bits) =>
-          graft.ops.Bloom.pruneWithBits(m, "surface_norm", bits)
-        case None =>
-          graft.ops.Bloom.prune(m, "surface_norm",
-            aliases.select(col("surface_norm").cast("string")).distinct()
-              .as[String])
-      }
-    val skew = skewKeys.getOrElse(inferSkewKeysNorm(spark, mIn))
-    val skewArr = skewArray(skew)
-    // candidate table materialized once (dictionary-sized ×
-    // salts-on-heads): both the join and — through it — the anchor
-    // aggregation consume it
-    val cands = explodeSalts(ctxCandidates(aliases, canon), skewArr,
-      saltBuckets).localCheckpoint(eager = false, graft.ops.Par.cutLevel)
-    val salted = mIn.withColumn("salt", mentionSalt(skewArr, saltBuckets))
-    val joined = salted.join(cands, Seq("surface_norm", "salt")).drop("salt")
-    ctxPick(joined, m.columns.toIndexedSeq)
-  }
-
-  /** [[inferSkewKeys]] over a pre-normalized mention projection. */
   def inferSkewKeysNorm(spark: SparkSession, m: DataFrame,
                         topK: Int = 20, sampleFraction: Double = 0.01): Seq[String] = {
     val s = if (sampleFraction < 1.0) m.sample(sampleFraction, 42) else m

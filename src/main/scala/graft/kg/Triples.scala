@@ -14,8 +14,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * Shuffle budget: one groupByKey on doc_id covers the per-doc
   * distinct, the pair expansion (entity sets per doc are tiny), the
   * media adjacency AND the relation-endpoint re-pairing — all of them
-  * doc-local (r8: media and endpoints ride the same units stream, so
-  * no cogroup second input and no corpus-wide re-pairing shuffle).
+  * doc-local, with media and endpoints riding the same units stream.
   * Output is bucketed by hash(doc_id) for stable lineage partition ids.
   */
 object Triples {
@@ -36,9 +35,8 @@ object Triples {
   case class SlimRelation(span_offset: Int, sentence_idx: Int,
                           subj: String, rel: String, obj: String)
 
-  /** A doc's media span, slim for the shuffle (r8: media rides the
-    * units stream off the single detect pass instead of a second
-    * doc-table scan + cogroup input).
+  /** A doc's media span, slim for the shuffle: media rides the units
+    * stream off the single detect pass.
     */
   case class SlimMedia(span_offset: Int, media_ref: String)
 
@@ -125,44 +123,10 @@ object Triples {
       .sortBy(t => (t.pred, t.subj, t.obj))
   }
 
-  /** Assemble triples from linked mentions + media spans: ONE shuffle
-    * (cogroup on doc_id) over the slim projection; everything else is
-    * per-group Scala.
-    */
-  def build(spark: SparkSession,
-            linked: Dataset[LinkedMention],
-            mediaSpans: Dataset[(String, Int, String)], // (doc_id, offset, media_ref)
-            buckets: Int): Dataset[Triple] = {
-    import spark.implicits._
-    val units = linked.map(l => DocUnit(l.doc_id,
-      SlimMention(l.span_offset, l.sentence_idx, l.entity_id, l.conf), null))
-    buildUnits(spark, units, mediaSpans, buckets)
-  }
-
-  /** Unit-level variant with a SEPARATE media-span input — kept for
-    * callers that read media from a pruned column scan; the pipeline
-    * itself now threads media through the units stream and uses the
-    * single-input overload below (one shuffle input instead of two).
-    */
-  def buildUnits(spark: SparkSession,
-                 units: Dataset[DocUnit],
-                 mediaSpans: Dataset[(String, Int, String)],
-                 buckets: Int): Dataset[Triple] = {
-    import spark.implicits._
-    units.groupByKey(_.doc_id)
-      .cogroup(mediaSpans.groupByKey(_._1)) { (docId, us, media) =>
-        val all = us.toSeq
-        triplesOfDoc(docId, buckets,
-          all.filter(_.m != null).map(_.m),
-          media.map(m => (m._2, m._3)).toSeq,
-          all.filter(_.r != null).map(_.r))
-      }
-  }
-
-  /** Single-stream form: mentions, relations (pre-paired OR as raw
-    * linked endpoints) AND media in ONE grouped input — the cogroup's
-    * second shuffle input and the corpus-wide endpoint re-pairing
-    * shuffle both disappear; per-doc assembly is unchanged.
+  /** Assemble triples from ONE grouped input: mentions, relations
+    * (pre-paired OR as raw linked endpoints) AND media. Endpoints re-pair
+    * and media adjacency resolves inside the per-doc group, so neither
+    * needs a second shuffle input.
     *
     * Grouping is `groupBy(col).as[K, T]`, NOT `groupByKey(closure)`:
     * the closure form plans an AppendColumns pass that deserializes

@@ -104,12 +104,10 @@ object Filters {
     */
   def contamination(docs: DataFrame, benchMaxId: Long = 20, n: Int = 8): DataFrame = {
     val grams = array_distinct(TextOps.shinglesN(col("text"), n))
-    // fan-out REVERTED in the r8 second pass (light kernel — 0.16 s
-    // single-task in the r7 driver's contended window; premium > win)
-    val fanned = docs.select(col("doc_id"), col("text"))
-    val bench = fanned.where(col("doc_id") < benchMaxId)
+    val docText = docs.select(col("doc_id"), col("text"))
+    val bench = docText.where(col("doc_id") < benchMaxId)
       .select(explode(grams).as("gram")).distinct()
-    val corpus = fanned.where(col("doc_id") >= benchMaxId)
+    val corpus = docText.where(col("doc_id") >= benchMaxId)
     val hits = corpus.select(col("doc_id"), explode(grams).as("gram"))
       .join(broadcast(bench), "gram")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Reusable skew-salted equi-join — the generic form of the technique
   * the KG linker applies to Zipf-headed mention surfaces
-  * (kg/Linker.scala `saltedBest`): without salting, every row of a
+  * (kg/Linker.scala `linkSaltedCarry`): without salting, every row of a
   * heavy key lands on ONE reduce task and the job runs at the speed of
   * its hottest key.
   *
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * Heavy-key detection here is an exact count threshold (deterministic,
   * auditable — [[Diagnostics.skewReport]] is its reporting twin); at
-  * 100 TB swap in a sampled head like `Linker.inferSkewKeys` — a Zipf
+  * 100 TB swap in a sampled head like `Linker.inferSkewKeysNorm` — a Zipf
   * head survives 1% sampling, and a missed head key costs only the
   * unsalted slow path, never correctness.
   */

@@ -26,19 +26,17 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * form (broadcast-hash or shuffled) Spark picks from the table's size.
   * Either way the detect output has one consumer, and the one keyed
   * exchange the pipeline itself adds is the per-doc grouping that
-  * materializes triples.
+  * materializes triples. The chain has no optional stages: [[Config]]
+  * picks only the output buckets, the link regime and the
+  * scored-dictionary store.
   */
 object KgPipeline {
 
+  /** The settings callers choose: output buckets (the lineage and
+    * resume grain), the link regime and the scored-dictionary store.
+    */
   case class Config(
       buckets: Int = 64,
-      batchSize: Int = 256, // windows per tagger batch (webapp/config.json:2)
-      sentBatch: Int = 64,  // sentences buffered per encode batch
-      maxSeqLen: Int = 128, // Makefile:38
-      // salt fan-out of the hand-salted Linker joins; `run` does not
-      // read it (its salted path is one plain join, skew left to AQE) —
-      // only Linker helpers and the benchmark's link replay do
-      saltBuckets: Int = 8,
       broadcastLink: Boolean = true,
       // store root for the snapshot-keyed scored-dictionary table
       // (graft.store.DictStore): when set, the salted path READS the
@@ -46,50 +44,11 @@ object KgPipeline {
       // O(dictionary) canon+scoring slice per run — the amortization
       // every micro-batch / repeated job over the same dictionary
       // snapshot relies on at scale
-      dictStore: Option[String] = None,
-      // opt-in CONTEXT-AWARE linking on the salted path: the mention ↔
-      // candidate join runs through Linker.linkContextual — the same one
-      // join input, candidate scoring gains the co-mention anchor
-      // feature between type match and prior. Output is
-      // identical to the prior-only path whenever no surface is
-      // ambiguous after canonicalization (golden parity in
-      // PipelineSpec); the candidate table is built inline per run
-      // (the scored-dict store amortizes the PRIOR-ONLY table — a
-      // deployment running contextual steadily would materialize the
-      // ctx candidate table in the DictStore the same way)
-      contextualLink: Boolean = false,
-      // opt-in ingest CURATION gate: documents whose concatenated text
-      // spans fail [[graft.ops.Filters.curationFunnel]] (target
-      // language, token floor, repetition ppm, PII, exact-dup
-      // first-wins) never reach the detect stage — the production
-      // order: row-local filters drop the bulk of a web crawl BEFORE
-      // the pipeline's shuffles. None = gate off (exact legacy path).
-      curate: Option[CurateCfg] = None)
-
-  /** Thresholds for the [[Config.curate]] ingest gate. The corpus
-    * generator plants GERMAN sentences, hence lang="de"; minWords
-    * defaults low because KG docs are sentence-granular, not web pages.
-    */
-  case class CurateCfg(lang: String = "de", minWords: Long = 5,
-                       dupPpmMax: Long = 700000L)
-
-  /** The [[Config.curate]] gate: keep exactly the docs the funnel tags
-    * `kept`, judged on the concatenated text spans (media spans carry
-    * no text signal). Semi join back on doc_id so the Doc rows pass
-    * through untouched.
-    */
-  def curationKeep(spark: SparkSession, docs: Dataset[Doc],
-                   c: CurateCfg): Dataset[Doc] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val txt = docs.map(d => (d.doc_id,
-        d.spans.filter(_.kind == "text").sortBy(_.offset)
-          .map(_.text).mkString(" ")))
-      .toDF("doc_id", "text")
-    val keep = graft.ops.Filters
-      .curationFunnel(txt, c.lang, c.minWords, c.dupPpmMax)
-      .where(col("drop_stage") === "kept").select("doc_id")
-    docs.join(keep, Seq("doc_id"), "left_semi").as[Doc]
+      dictStore: Option[String] = None) {
+    // here so the benchmark's window counter encodes as detect does (Makefile:38)
+    val maxSeqLen: Int = 128
+    // here for the benchmark's salted link replay; `run` itself never salts
+    val saltBuckets: Int = 8
   }
 
   /** Build the standard tagger/encoder pair over the built-in vocab and
@@ -104,42 +63,39 @@ object KgPipeline {
     (full ++ lastNames).toMap
   }
 
+  /** A doc's text spans in offset order, one sentence each; guid =
+    * doc/offset/sentIdx. [[fusedDetect]] parses media sentinel guids in
+    * the same format, and the sentence index at the end keeps their "/m"
+    * suffix from colliding.
+    */
+  private def textSentences(d: Doc): Array[Sentence] =
+    d.spans.filter(_.kind == "text").sortBy(_.offset).zipWithIndex.map {
+      case (sp, sidx) =>
+        val words = TextCore.whitespaceTokenize(sp.text)
+        Sentence(s"${d.doc_id}/${sp.offset}/$sidx", words,
+          Array.fill(words.length)("O"))
+    }
+
   /** docs → sentences: one per text span; guid = doc/offset/sentIdx. */
   def sentences(spark: SparkSession, docs: Dataset[Doc]): Dataset[Sentence] = {
     import spark.implicits._
-    docs.flatMap { d =>
-      d.spans.filter(_.kind == "text").sortBy(_.offset).zipWithIndex.map {
-        case (sp, sidx) =>
-          val words = TextCore.whitespaceTokenize(sp.text)
-          Sentence(s"${d.doc_id}/${sp.offset}/$sidx", words,
-            Array.fill(words.length)("O"))
-      }
-    }
+    docs.flatMap(d => textSentences(d))
   }
 
   /** [[sentences]] PLUS the doc's media spans as sentinel rows (guid =
     * doc/offset/m, words = [media_ref]) — ONE pass over the doc table
     * serves both the detect stage and triple assembly's media
-    * adjacency, instead of a second full scan/generation for
-    * [[mediaSpans]] (r8; the fused detect passes sentinels through
-    * untouched). Real sentence guids end in the sentence index, so the
-    * "/m" suffix cannot collide.
+    * adjacency (the fused detect passes sentinels through untouched).
     */
   private def sentencesAndMedia(spark: SparkSession,
                                 docs: Dataset[Doc]): Dataset[Sentence] = {
     import spark.implicits._
     docs.flatMap { d =>
-      val texts = d.spans.filter(_.kind == "text").sortBy(_.offset)
-        .zipWithIndex.map { case (sp, sidx) =>
-          val words = TextCore.whitespaceTokenize(sp.text)
-          Sentence(s"${d.doc_id}/${sp.offset}/$sidx", words,
-            Array.fill(words.length)("O"))
-        }
       val media = d.spans.filter(_.kind == "media").map { sp =>
         Sentence(s"${d.doc_id}/${sp.offset}/m", Array(sp.media_ref),
           Array.empty[String])
       }
-      texts ++ media
+      textSentences(d) ++ media
     }
   }
 
@@ -163,7 +119,7 @@ object KgPipeline {
 
   /** The fused detect stage: encode → batched tag → decode in ONE
     * mapPartitions (no shuffle). Batches windows ACROSS sentences
-    * (cfg.sentBatch at a time) so the tagger sees production-sized
+    * (64 at a time) so the tagger sees production-sized
     * batches, then re-glues within the task. With `emitRelations` the
     * same pass also extracts typed verb-pattern relation candidates over
     * the decoded mentions (zero extra passes); mention-only consumers
@@ -177,8 +133,8 @@ object KgPipeline {
     val bcEncoder = spark.sparkContext.broadcast(
       new WindowEncoder(Vocab.default, Vocab.tokenToId, Tags.labelMap, cfg.maxSeqLen))
     val bcRealigner = spark.sparkContext.broadcast(new Realigner(Vocab.default))
-    val batchSize = cfg.batchSize
-    val sentBatch = cfg.sentBatch
+    val batchSize = 256 // windows per tagger batch (webapp/config.json:2)
+    val sentBatch = 64  // sentences buffered per encode batch
     sents.mapPartitions { it =>
       val enc = bcEncoder.value
       val tag = bcTagger.value
@@ -238,39 +194,11 @@ object KgPipeline {
     fusedDetect(spark, sents, tagger, cfg, emitRelations = false).map(_.mention)
   }
 
-  /** Media spans table for the adjacency join — COLUMN ops, not a typed
-    * flatMap: a typed lambda would deserialize whole Doc objects and
-    * defeat nested-schema pruning, making this second scan of the doc
-    * table re-read the span TEXT payload (the bulk of the bytes at
-    * 100 TB). As column expressions, Catalyst prunes the parquet read to
-    * spans.{kind,offset,media_ref} only (plan-asserted in PlanSpec).
-    */
-  def mediaSpans(spark: SparkSession, docs: Dataset[Doc]): Dataset[(String, Int, String)] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // per-field array extraction (spans.kind etc.) is what Catalyst's
-    // nested-schema pruning handles reliably; a bare explode(spans)
-    // would read the whole struct including text
-    docs.toDF()
-      .select(col("doc_id"),
-        explode(arrays_zip(col("spans.kind"), col("spans.offset"),
-          col("spans.media_ref"))).as("sp"))
-      .where(col("sp.kind") === "media")
-      .select(col("doc_id").as("_1"), col("sp.offset").as("_2"),
-        col("sp.media_ref").as("_3"))
-      .as[(String, Int, String)]
-  }
-
-  /** Dictionary-side preparation: alias lookup map + canonicalization map
-    * from connected components over the alias graph. This is O(dictionary)
-    * one-time setup, independent of the document corpus — at 10^12 docs it
-    * amortizes to zero and is shared across every job over the same
-    * dictionary snapshot (the reference's warm-singleton-model pattern,
-    * webapp/app.py:126-149).
-    */
-  /** `dictSnapshotId` is the content fingerprint of the alias snapshot
-    * this context was prepared FROM; when present, the salted path
-    * trusts it instead of re-fingerprinting (zero extra jobs). The
+  /** A prepared dictionary side for [[run]], reused across runs over
+    * the same dictionary snapshot. `dictSnapshotId` is the content
+    * fingerprint of the alias snapshot this context was prepared FROM;
+    * when present, the salted path trusts it instead of
+    * re-fingerprinting (zero extra jobs). The
     * caller's contract is the usual warm-singleton one: a context is
     * valid for the dictionary snapshot it was built from — after a
     * dictionary push, prepare a new context (or run ctx-less, which
@@ -309,6 +237,13 @@ object KgPipeline {
     */
   val linkContextCalls = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Dictionary-side preparation: alias lookup map + canonicalization map
+    * from connected components over the alias graph. This is O(dictionary)
+    * one-time setup, independent of the document corpus — at 10^12 docs it
+    * amortizes to zero and is shared across every job over the same
+    * dictionary snapshot (the reference's warm-singleton-model pattern,
+    * webapp/app.py:126-149).
+    */
   def prepareLinkContext(spark: SparkSession, aliases: Dataset[Alias]): LinkContext = {
     linkContextCalls.incrementAndGet()
     val all = aliases.collect().toSeq
@@ -359,12 +294,9 @@ object KgPipeline {
     import spark.implicits._
     import org.apache.spark.sql.functions.{array, coalesce, col, concat_ws, element_at, explode, lit, struct, udf, when}
     import graft.kg.Triples.{DocUnit, SlimRelation}
-    val inDocs = cfg.curate.map(c => curationKeep(spark, docs, c))
-      .getOrElse(docs)
     // ONE doc pass: media spans ride the sentence stream as sentinels
-    // through detect (r8) — the previous shape re-scanned/regenerated
-    // the doc table a second time just for mediaSpans
-    val sents = sentencesAndMedia(spark, inDocs)
+    // through detect
+    val sents = sentencesAndMedia(spark, docs)
     val units: Dataset[DocUnit] =
       if (cfg.broadcastLink) {
         // broadcast regime: the dictionary fits in memory by premise, so
@@ -500,33 +432,27 @@ object KgPipeline {
         // unlinked endpoint still drops its relation candidate
         val isMedia = col("role") === "md"
         def canon = ConnectedComponents.canonicalMap(spark, aliases.toDF())
-        val linked =
-          if (cfg.contextualLink)
-            Linker.linkContextual(spark, joinIn, aliases, Some(canon),
-              keep = Some(isMedia))
-          else {
-            // the scored dictionary: READ from the snapshot-keyed
-            // DictStore table (built at most once per dictionary
-            // snapshot) or built inline per run (tests / one-shot jobs).
-            // No join hint: Spark broadcasts it when it is small and
-            // shuffles otherwise, where AQE's skew-join split takes the
-            // hot surfaces (left-outer splits the left side)
-            val scored = cfg.dictStore match {
-              case Some(storeRoot) =>
-                val snapId = ctx.flatMap(_.dictSnapshotId)
-                  .getOrElse(graft.store.DictStore.fingerprint(spark, aliases))
-                graft.store.DictStore.ensureScored(spark, storeRoot, snapId,
-                  aliases, Some(canon))
-              case None => Linker.scoredDict(spark, aliases, Some(canon))
-            }
-            val picked = coalesce(
-              element_at(col("by_type"), col("entity_type")), col("any_best"))
-            joinIn.join(scored, Seq("surface_norm"), "left_outer")
-              .where(isMedia || col("any_best").isNotNull)
-              .select(joinIn.columns.map(col).toIndexedSeq :+
-                picked.getField("entity_id").as("entity_id") :+
-                picked.getField("prior").as("conf"): _*)
-          }
+        // the scored dictionary: READ from the snapshot-keyed DictStore
+        // table (built at most once per dictionary snapshot) or built
+        // inline per run (tests / one-shot jobs). No join hint: Spark
+        // broadcasts it when it is small and shuffles otherwise, where
+        // AQE's skew-join split takes the hot surfaces (left-outer
+        // splits the left side)
+        val scored = cfg.dictStore match {
+          case Some(storeRoot) =>
+            val snapId = ctx.flatMap(_.dictSnapshotId)
+              .getOrElse(graft.store.DictStore.fingerprint(spark, aliases))
+            graft.store.DictStore.ensureScored(spark, storeRoot, snapId,
+              aliases, Some(canon))
+          case None => Linker.scoredDict(spark, aliases, Some(canon))
+        }
+        val picked = coalesce(
+          element_at(col("by_type"), col("entity_type")), col("any_best"))
+        val linked = joinIn.join(scored, Seq("surface_norm"), "left_outer")
+          .where(isMedia || col("any_best").isNotNull)
+          .select(joinIn.columns.map(col).toIndexedSeq :+
+            picked.getField("entity_id").as("entity_id") :+
+            picked.getField("prior").as("conf"): _*)
         // COLUMNAR DocUnit construction — `when`/`struct` selects whose
         // field names mirror the case classes, so the rows reach the
         // doc-keyed exchange straight from whole-stage codegen; endpoint

@@ -53,48 +53,6 @@ class LinkerCtxSpec extends AnyFunSuite {
     assert(out(("d2", fr)) == "ORGX_F#0")
   }
 
-  test("linkContextualSalted: result-identical to linkContextual, salt keys in the shuffle plan") {
-    val neu = CorpusGen.normSurface("Neustadt")
-    val falk = CorpusGen.normSurface("Falkenburg")
-    val adler = CorpusGen.normSurface("Adlerburg")
-    val m = mentionsDf(Seq(
-      ("d_none", 0, 0, neu, "LOC"),
-      ("d_b", 0, 0, neu, "LOC"), ("d_b", 0, 1, falk, "LOC"),
-      ("d_a", 0, 0, neu, "LOC"), ("d_a", 0, 1, adler, "LOC"),
-      ("d_both", 0, 0, neu, "LOC"), ("d_both", 0, 1, falk, "LOC"),
-      ("d_both", 0, 2, adler, "LOC"),
-      ("d_oov", 0, 0, "nicht_im_woerterbuch", "LOC"))) // bloom+join drop it
-    val aliases = CorpusGen.ctxAliases(spark)
-    def keyed(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3),
-        r.getString(4), r.getString(5), r.getDouble(6), r.getLong(7))).toSet
-    val plain = keyed(Linker.linkContextual(spark, m, aliases))
-    // the planted flip must be present — parity below is not vacuous
-    assert(plain.exists(t => t._1 == "d_b" && t._4 == neu && t._6 == "LOCX_B#0"))
-    // salted + bloom, HEAD SURFACE FORCED into the skew set (the
-    // dictionary rows of `neu` replicate across all salts)
-    val salted = keyed(Linker.linkContextualSalted(spark, m, aliases,
-      saltBuckets = 4, skewKeys = Some(Seq(neu))))
-    assert(salted == plain && plain.nonEmpty)
-    // inferred skew + no bloom: still identical (salting and bloom are
-    // result-invariant physical choices)
-    val salted2 = keyed(Linker.linkContextualSalted(spark, m, aliases,
-      bloomPrune = false))
-    assert(salted2 == plain)
-    // PAST the broadcast threshold the join shuffles on (surface, salt)
-    // — the Zipf-skew defusal the scaladoc claims
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val df = Linker.linkContextualSalted(spark, m, aliases,
-        saltBuckets = 4, skewKeys = Some(Seq(neu)))
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      val saltKeyed = "hashpartitioning\\(surface_norm#\\d+, salt#\\d+".r
-      assert(saltKeyed.findFirstIn(plan).isDefined, plan)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("parity with the prior-only salted path when no surface is ambiguous") {
     import spark.implicits._
     val aliases = CorpusGen.aliases(spark)
@@ -110,7 +68,7 @@ class LinkerCtxSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2),
         r.getString(3), r.getDouble(4))).toSet
     val ctx = keyed(Linker.linkContextual(spark, m, aliases))
-    val prior = keyed(Linker.linkSaltedSlim(spark, m, aliases).toDF())
+    val prior = keyed(Linker.linkSaltedCarry(spark, m, aliases))
     assert(ctx == prior)
     assert(ctx.nonEmpty)
   }

@@ -61,6 +61,11 @@ class PlanSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     // join key includes the salt column
     assert(plan.contains("salt"), plan)
+    // candidates are ranked dictionary-side: no aggregate regroups the
+    // mentions (keyed on span_offset) after the join (HashAggregate
+    // prints `keys=`, SortAggregate `key=`)
+    assert("Aggregate\\(keys?=\\[[^\\]]*span_offset".r.findFirstIn(plan).isEmpty,
+      plan)
   }
 
   test("salted KG run: one left-outer link join, no salt column, one doc-keyed exchange") {
@@ -178,22 +183,6 @@ class PlanSpec extends AnyFunSuite {
     val b = graft.ops.Sketches.kmvDistinct(docs).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(a == b && a.nonEmpty)
-  }
-
-  test("mediaSpans over parquet docs prunes the span text payload from the scan") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_docs_pq")
-      .toString + "/docs"
-    graft.gen.CorpusGen.docs(spark, 30, parts = 2).write.parquet(dir)
-    val docs = spark.read.parquet(dir).as[graft.model.Doc]
-    val ms = graft.pipeline.KgPipeline.mediaSpans(spark, docs)
-    ms.collect()
-    val p = ms.queryExecution.executedPlan.toString
-    val readSchema = p.linesIterator.find(_.contains("ReadSchema"))
-      .getOrElse(fail(s"no parquet scan in plan:\n$p"))
-    assert(!readSchema.contains("text"),
-      s"media-span scan reads the span text payload: $readSchema")
-    assert(readSchema.contains("media_ref"), readSchema)
   }
 
   test("repetitionStats plan is shuffle-free; asof join has exactly one exchange") {
@@ -351,7 +340,10 @@ class NormalizeSurfaceSpec extends AnyFunSuite {
       new graft.tag.GazetteerTagger(graft.pipeline.KgPipeline.defaultGazetteer))
       .persist()
     val aliases = graft.gen.CorpusGen.aliases(spark)
-    val skew = graft.kg.Linker.inferSkewKeys(spark, mentions, topK = 5)
+    graft.kg.NormalizeSurface.register(spark)
+    val skew = graft.kg.Linker.inferSkewKeysNorm(spark, mentions.toDF()
+      .select(graft.kg.NormalizeSurface(col("surface")).as("surface_norm")),
+      topK = 5)
     assert(skew.nonEmpty && skew.size <= 5)
     val dict = graft.gen.CorpusGen.aliasDict.groupBy(_.surface_norm)
     val viaBroadcast = graft.kg.Linker.linkBroadcast(spark, mentions, dict)

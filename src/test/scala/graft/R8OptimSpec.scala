@@ -32,15 +32,18 @@ class R8OptimSpec extends AnyFunSuite {
       DocUnit("d1", SlimMention(2, 0, "E2", 0.8), null),
       DocUnit("d2", SlimMention(0, 1, "E1", 0.7), null))
     val mediaTuples = Seq(("d1", 1, "m://x"), ("d2", 9, "m://far"))
-    // legacy: separate media input
-    val legacy = Triples.buildUnits(spark, spark.createDataset(ms),
-      spark.createDataset(mediaTuples), buckets = 8).collect().toSet
-    // r8: media rides the units stream
+    // reference: the pure per-doc assembly over each doc's rows
+    val expected = Seq("d1", "d2").flatMap { d =>
+      Triples.triplesOfDoc(d, 8, ms.filter(_.doc_id == d).map(_.m),
+        mediaTuples.filter(_._1 == d).map(t => (t._2, t._3)))
+    }.toSet
+    // media rides the units stream
     val units = ms ++ mediaTuples.map { case (d, off, ref) =>
       DocUnit(d, null, null, SlimMedia(off, ref)) }
     val single = Triples.buildUnits(spark, spark.createDataset(units),
       buckets = 8).collect().toSet
-    assert(single == legacy)
+    assert(single == expected)
+    assert(single.exists(_.pred == "depicted_in")) // media adjacency is exercised
 
     // endpoint pairing: complete pair links; missing endpoint drops;
     // duplicate same-role candidates merge by max entity id

@@ -2,7 +2,7 @@ package graft
 
 import graft.gen.CorpusGen
 import graft.pipeline.KgPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,6 +25,16 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = s.read.parquet(s"$dir/$name.parquet")
     sys.props.get("graft.limit").fold(df)(n => df.limit(n.toInt))
+  }
+
+  /** The broadcast-link triples over the 500-doc generated corpus, after
+    * writing their sequential golden (Goldens.writeTriples) for the
+    * oracle to read — the input of kg_triples and the graph queries.
+    */
+  private def goldenTriples(s: SparkSession): Dataset[graft.model.Triple] = {
+    graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
+    val docs = CorpusGen.docs(s, 500, parts = 8)
+    KgPipeline.run(s, docs, CorpusGen.aliases(s))
   }
 
   /** q101's per-JVM store root (built+compacted once, lookups repeat).
@@ -389,42 +399,22 @@ object SparkEntry {
     // ---- KG graph analytics over the materialized triple store; the
     //      oracle reads the SAME co-occurrence graph from the sequential
     //      golden (hash-verified identical to the pipeline's output) ----
-    "q51_kg_degrees" -> ((s, dir) => {
-      graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
-      val docs = CorpusGen.docs(s, 500, parts = 8)
-      val triples = KgPipeline.run(s, docs, CorpusGen.aliases(s))
-      graft.kg.GraphOps.degreeDistribution(triples).orderBy("degree")
-    }),
-    "q52_kg_pagerank" -> ((s, dir) => {
-      graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
-      val docs = CorpusGen.docs(s, 500, parts = 8)
-      val triples = KgPipeline.run(s, docs, CorpusGen.aliases(s))
-      graft.kg.GraphOps.pageRank(triples, iters = 3).orderBy("entity")
-    }),
+    "q51_kg_degrees" -> ((s, dir) =>
+      graft.kg.GraphOps.degreeDistribution(goldenTriples(s)).orderBy("degree")),
+    "q52_kg_pagerank" -> ((s, dir) =>
+      graft.kg.GraphOps.pageRank(goldenTriples(s), iters = 3).orderBy("entity")),
     // ---- triangle counts (degree-ordered orientation; oracle uses the
     //      orientation-free naive a<b<c triple-join — same counts) ----
-    "q58_kg_triangles" -> ((s, dir) => {
-      graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
-      val docs = CorpusGen.docs(s, 500, parts = 8)
-      val triples = KgPipeline.run(s, docs, CorpusGen.aliases(s))
-      graft.kg.GraphOps.triangleCounts(triples).orderBy("entity")
-    }),
+    "q58_kg_triangles" -> ((s, dir) =>
+      graft.kg.GraphOps.triangleCounts(goldenTriples(s)).orderBy("entity")),
     // ---- integer-math co-occurrence lift (relation-strength score) ----
-    "q59_kg_lift" -> ((s, dir) => {
-      graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
-      val docs = CorpusGen.docs(s, 500, parts = 8)
-      val triples = KgPipeline.run(s, docs, CorpusGen.aliases(s))
-      graft.kg.GraphOps.cooccurrenceLift(triples).orderBy("subj", "obj")
-    }),
+    "q59_kg_lift" -> ((s, dir) =>
+      graft.kg.GraphOps.cooccurrenceLift(goldenTriples(s)).orderBy("subj", "obj")),
     // ---- deterministic label-propagation communities (sync updates,
     //      count-desc/label-asc ties — replayable, unlike async LPA) ----
-    "q65_kg_communities" -> ((s, dir) => {
-      graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
-      val docs = CorpusGen.docs(s, 500, parts = 8)
-      val triples = KgPipeline.run(s, docs, CorpusGen.aliases(s))
-      graft.kg.GraphOps.labelPropagation(triples, iters = 2)
-        .orderBy("entity")
-    }),
+    "q65_kg_communities" -> ((s, dir) =>
+      graft.kg.GraphOps.labelPropagation(goldenTriples(s), iters = 2)
+        .orderBy("entity")),
     // ---- key-skew diagnostics (top-N heavy keys, integer ppm share) ----
     "q66_skew_report" -> ((s, dir) =>
       graft.ops.Diagnostics.skewReport(t(s, dir, "events"), "user_id",
@@ -511,31 +501,19 @@ object SparkEntry {
         .orderBy("source", "p")),
     // ---- breadth-first k-hop reachability from a deterministic seed
     //      set (frontier BFS; oracle = recursive CTE + min(hops)) ----
-    "q69_kg_khop" -> ((s, dir) => {
-      graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
-      val docs = CorpusGen.docs(s, 500, parts = 8)
-      val triples = KgPipeline.run(s, docs, CorpusGen.aliases(s))
-      graft.kg.GraphOps.kHopDistances(triples, maxHops = 3, seedMod = 16)
-        .orderBy("entity")
-    }),
+    "q69_kg_khop" -> ((s, dir) =>
+      graft.kg.GraphOps.kHopDistances(goldenTriples(s), maxHops = 3, seedMod = 16)
+        .orderBy("entity")),
     // ---- entity-neighbourhood Jaccard (integer ppm; wedge join with
     //      the hub-degree cap replayed by the oracle) ----
-    "q72_kg_nbr_jaccard" -> ((s, dir) => {
-      graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
-      val docs = CorpusGen.docs(s, 500, parts = 8)
-      val triples = KgPipeline.run(s, docs, CorpusGen.aliases(s))
-      graft.kg.GraphOps.neighborhoodJaccard(triples)
-        .orderBy("a", "b")
-    }),
+    "q72_kg_nbr_jaccard" -> ((s, dir) =>
+      graft.kg.GraphOps.neighborhoodJaccard(goldenTriples(s))
+        .orderBy("a", "b")),
     // ---- personalized (seed-teleport) integer PageRank: relevance to
     //      the q69 seed set rather than global centrality ----
-    "q83_kg_ppr" -> ((s, dir) => {
-      graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
-      val docs = CorpusGen.docs(s, 500, parts = 8)
-      val triples = KgPipeline.run(s, docs, CorpusGen.aliases(s))
-      graft.kg.GraphOps.personalizedPageRank(triples, iters = 3, seedMod = 16)
-        .orderBy("entity")
-    }),
+    "q83_kg_ppr" -> ((s, dir) =>
+      graft.kg.GraphOps.personalizedPageRank(goldenTriples(s), iters = 3, seedMod = 16)
+        .orderBy("entity")),
     // ---- bounded-state histogram quantiles per group (the approximate
     //      twin of q68's exact rank-select scan) ----
     "q70_hist_quantile" -> ((s, dir) =>
@@ -647,12 +625,8 @@ object SparkEntry {
       graft.ops.VocabOps.bpeMergePairs(t(s, dir, "documents"), k = 20)
         .orderBy("rank")),
     // ---- local clustering coefficient (integer ppm) ----
-    "q75_kg_clustering" -> ((s, dir) => {
-      graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
-      val docs = CorpusGen.docs(s, 500, parts = 8)
-      val triples = KgPipeline.run(s, docs, CorpusGen.aliases(s))
-      graft.kg.GraphOps.clusteringCoefficient(triples).orderBy("entity")
-    }),
+    "q75_kg_clustering" -> ((s, dir) =>
+      graft.kg.GraphOps.clusteringCoefficient(goldenTriples(s)).orderBy("entity")),
     // ---- change-data capture between two dimension snapshots (both
     //      snapshots derived from customer by md5 rules both engines
     //      replay; unchanged keys dropped) ----
@@ -900,13 +874,10 @@ object SparkEntry {
     // ---- KG pipeline stages: hash-compared against SEQUENTIAL golden
     //      replays of plant-time knowledge (graft.gen.Goldens), which the
     //      DuckDB oracle reads back via read_parquet ----
-    "kg_triples" -> ((s, dir) => {
-      graft.gen.Goldens.writeTriples(s, 500, KgPipeline.Config().buckets)
-      val docs = CorpusGen.docs(s, 500, parts = 8)
-      KgPipeline.run(s, docs, CorpusGen.aliases(s)).toDF()
+    "kg_triples" -> ((s, dir) =>
+      goldenTriples(s).toDF()
         .select("subj", "pred", "obj", "doc_id", "bucket", "conf")
-        .orderBy("doc_id", "pred", "subj", "obj")
-    }),
+        .orderBy("doc_id", "pred", "subj", "obj")),
     "kg_mentions" -> ((s, dir) => {
       graft.gen.Goldens.writeMentions(s, 500)
       val docs = CorpusGen.docs(s, 500, parts = 8)
@@ -988,17 +959,8 @@ object SparkEntry {
       graft.gen.Goldens.writeEval(s, "kg_gt_eval", 300)
       val gt = CorpusGen.gtTokens(s, 300, parts = 8)
       val sents = graft.etl.Assembly.sentences(s, gt)
-      val enc = new graft.text.WindowEncoder(
-        graft.text.Vocab.default, graft.text.Vocab.tokenToId, graft.text.Tags.labelMap)
-      val realigner = new graft.text.Realigner(graft.text.Vocab.default)
-      val tagger = new graft.tag.GoldLabelTagger(graft.text.Tags.invLabelMap)
-      val pred = sents.flatMap { sn =>
-        val (wins, counts) = enc.encodeWithCounts(sn.guid, sn.words, sn.tags)
-        val tagged = tagger.tagBatch(wins)
-        val (_, preds) = realigner.reglue(tagged.map(w => (w.tokens, w.preds)))
-        val tags = realigner.realignWithCounts(sn.words, counts, preds).map(_._2)
-        graft.decode.Decode.mentionsOf(sn.guid, sn.words, tags)
-      }
+      val pred = KgPipeline.detectMentions(s, sents,
+        new graft.tag.GoldLabelTagger(graft.text.Tags.invLabelMap))
       val gold = sents.flatMap(sn =>
         graft.decode.Decode.mentionsOf(sn.guid, sn.words, sn.tags))
         .map(m => graft.model.GoldMention(m.doc_id, m.span_offset,

@@ -13,8 +13,10 @@ import java.nio.charset.StandardCharsets
   *
   *   GET  /models              → the registry listing (app.py:166-168)
   *   POST /ner                 → default model
-  *   POST /ner/{id}            → raw text body → sentence-split → fused
-  *                               detect → the /ner JSON shape (app.py:317)
+  *   POST /ner/{id}            → raw text body → sentence-split → the
+  *                               detect kernel the batch pipeline runs
+  *                               (Decode.detect) → the /ner JSON shape
+  *                               (app.py:317)
   *   POST /tokenized           → sentence × word arrays with sentence
   *                               index, no model (app.py:171-182)
   *   POST /ner-bert-tokens     → html-escaped wordpiece tokens + RAW
@@ -130,36 +132,27 @@ class NerServer(spark: SparkSession, registry: ModelRegistry, port: Int = 0) {
     (_, text) => tokenized(text)))
   server.createContext("/ner", postEndpoint("/ner", classify))
 
-  /** One request runs the IDENTICAL per-sentence kernel the fused
-    * detect stage broadcasts (splitter → window encode → warm tagger →
-    * re-glue → re-align), sequentially — exactly like the reference's
-    * per-request path. q89's oracle proves this kernel and the
-    * distributed plan produce the same predictions, so the served
-    * response cannot drift from the batch pipeline's.
+  /** One request is ONE call of the detect kernel the fused detect
+    * stage runs ([[graft.decode.Decode.detect]]: window encode → warm
+    * tagger → re-glue → re-align) over the request's split sentences,
+    * like the reference's per-request `classify_text` (app.py:61-97).
+    * The served predictions and the batch pipeline's share that code,
+    * and NerServerSpec checks them against each other.
     */
-  // warm per-process singletons (the reference's PredictorStore contract,
-  // app.py:126-149): the encoder and realigner are built ONCE with the
-  // server — only the tagger warm-swaps on model-id change (ModelRegistry)
-  private val enc = new graft.text.WindowEncoder(
-    graft.text.Vocab.default, graft.text.Vocab.tokenToId,
-    graft.text.Tags.labelMap)
-  private val realigner = new graft.text.Realigner(graft.text.Vocab.default)
-
-  private def classify(modelId: Option[Int], text: String): String = {
-    import graft.text._
+  private def detect(modelId: Option[Int], text: String)
+      : Array[(Array[String], graft.decode.Decode.Detected)] = {
     val tagger = registry.get(modelId)
-    val sents = SentenceSplitter.sentences(text)
-    sents.map { words =>
-      val (wins, counts) =
-        enc.encodeWithCounts("req/0/0", words, Array.fill(words.length)("O"))
-      val tagged = tagger.tagBatch(wins)
-      val (_, preds) = realigner.reglue(tagged.map(w => (w.tokens, w.preds)))
-      val tags = realigner.realignWithCounts(words, counts, preds).map(_._2)
-      words.zip(tags).map { case (w, t) =>
+    val sents = graft.text.SentenceSplitter.sentences(text).map(words =>
+      graft.model.Sentence("req/0/0", words, Array.fill(words.length)("O")))
+    sents.map(_.words).zip(graft.decode.Decode.detect(sents, tagger))
+  }
+
+  private def classify(modelId: Option[Int], text: String): String =
+    detect(modelId, text).map { case (words, d) =>
+      words.zip(d.tags).map { case (w, t) =>
         s"""{"word":${jsonStr(w)},"prediction":${jsonStr(t)}}"""
       }.mkString("[", ",", "]")
     }.mkString("[", ",", "]")
-  }
 
   /** `/tokenized` (app.py:171-182): sentence-split only, no model —
     * `[[ [word, ...], sentence_idx ], ...]` (the reference jsonifies
@@ -176,19 +169,12 @@ class NerServer(spark: SparkSession, registry: ModelRegistry, port: Int = 0) {
     * `fe.tokens[1:-1]` concatenation, app.py:78-84) zipped with the RAW
     * per-token predictions, html-escaped like the reference.
     */
-  private def bertTokens(modelId: Option[Int], text: String): String = {
-    import graft.text._
-    val tagger = registry.get(modelId)
-    SentenceSplitter.sentences(text).map { words =>
-      val (wins, _) =
-        enc.encodeWithCounts("req/0/0", words, Array.fill(words.length)("O"))
-      val tagged = tagger.tagBatch(wins)
-      val (toks, preds) = realigner.reglue(tagged.map(w => (w.tokens, w.preds)))
-      toks.zip(preds).map { case (t, p) =>
+  private def bertTokens(modelId: Option[Int], text: String): String =
+    detect(modelId, text).map { case (_, d) =>
+      d.tokens.zip(d.preds).map { case (t, p) =>
         s"""{"token":${jsonStr(NerOutput.htmlEscape(t))},"prediction":${jsonStr(p)}}"""
       }.mkString("[", ",", "]")
     }.mkString("[", ",", "]")
-  }
 
   private def jsonStr(s: String): String = {
     val b = new StringBuilder("\"")

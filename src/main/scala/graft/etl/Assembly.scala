@@ -26,10 +26,6 @@ object Assembly {
       .as[Sentence]
   }
 
-  /** P3 — dataset-membership filter (data_processor.py:309, 365). */
-  def selectDatasets(gt: Dataset[GtToken], sets: Seq[String]): Dataset[GtToken] =
-    gt.where(col("dataset").isin(sets: _*))
-
   /** ST1 — seeded epoch shuffle (data_processor.py:141-193): the
     * reference's 1000-slot random queue becomes a deterministic sort by a
     * seeded hash — stable under any partitioning, different per epoch.

@@ -45,14 +45,15 @@ object KgPipeline {
       // every micro-batch / repeated job over the same dictionary
       // snapshot relies on at scale
       dictStore: Option[String] = None) {
-    // here so the benchmark's window counter encodes as detect does (Makefile:38)
-    val maxSeqLen: Int = 128
+    // the detect kernel's window length, here so the benchmark's window
+    // counter encodes as detect does (Makefile:38)
+    val maxSeqLen: Int = Decode.maxSeqLen
     // here for the benchmark's salted link replay; `run` itself never salts
     val saltBuckets: Int = 8
   }
 
-  /** Build the standard tagger/encoder pair over the built-in vocab and
-    * the generator's gazetteer (normalized surface → type).
+  /** The generator's gazetteer (normalized surface → type) for the
+    * standard [[GazetteerTagger]].
     */
   def defaultGazetteer: Map[String, String] = {
     val all = CorpusGen.persons ++ CorpusGen.locations ++ CorpusGen.orgs
@@ -117,28 +118,23 @@ object KgPipeline {
     }
   }
 
-  /** The fused detect stage: encode → batched tag → decode in ONE
-    * mapPartitions (no shuffle). Batches windows ACROSS sentences
-    * (64 at a time) so the tagger sees production-sized
-    * batches, then re-glues within the task. With `emitRelations` the
-    * same pass also extracts typed verb-pattern relation candidates over
-    * the decoded mentions (zero extra passes); mention-only consumers
-    * skip that work. One code path for both views — they cannot drift.
+  /** The fused detect stage: [[Decode.detect]] (the one detect kernel)
+    * in ONE mapPartitions (no shuffle), 64 sentences per kernel call so
+    * the tagger sees production-sized batches, with a task-local
+    * wordpiece memo. Only the tagger is broadcast; the kernel's encoder
+    * and realigner are per-JVM constants. With `emitRelations` the same
+    * pass also extracts typed verb-pattern relation candidates over the
+    * decoded mentions (zero extra passes); mention-only consumers skip
+    * that work. One code path for both views — they cannot drift.
     */
   private def fusedDetect(spark: SparkSession, sents: Dataset[Sentence],
-                          tagger: MentionTagger, cfg: Config,
+                          tagger: MentionTagger,
                           emitRelations: Boolean): Dataset[DetectRow] = {
     import spark.implicits._
     val bcTagger = spark.sparkContext.broadcast(tagger)
-    val bcEncoder = spark.sparkContext.broadcast(
-      new WindowEncoder(Vocab.default, Vocab.tokenToId, Tags.labelMap, cfg.maxSeqLen))
-    val bcRealigner = spark.sparkContext.broadcast(new Realigner(Vocab.default))
-    val batchSize = 256 // windows per tagger batch (webapp/config.json:2)
-    val sentBatch = 64  // sentences buffered per encode batch
+    val sentBatch = 64  // sentences per kernel call
     sents.mapPartitions { it =>
-      val enc = bcEncoder.value
       val tag = bcTagger.value
-      val real = bcRealigner.value
       // task-local word->pieces memo (Zipfian word frequency)
       val cache = new java.util.HashMap[String, Array[String]]()
       it.grouped(sentBatch).flatMap { group =>
@@ -150,23 +146,8 @@ object KgPipeline {
           val p = s.guid.split('/')
           DetectRow(null, null, MediaSpanRow(p(0), p(1).toInt, s.words(0)))
         }
-        val perSent = realSent.map { s =>
-          val (wins, counts) = enc.encodeWithCounts(s.guid, s.words, s.tags, cache)
-          (s, wins, counts)
-        }
-        // tagBatch preserves order, so tagged windows zip back to their
-        // sentences positionally — no keyed map, no tuple boxing
-        val allWins = perSent.iterator.flatMap(_._2).toSeq
-        val tagged = allWins.grouped(batchSize).flatMap(tag.tagBatch).toArray
-        var cursor = 0
-        mediaRows ++ perSent.flatMap { case (s, wins, counts) =>
-          val tws = tagged.slice(cursor, cursor + wins.length)
-          cursor += wins.length
-          // windows of one sentence were emitted in winIdx order
-          val (_, preds) = real.reglue(scala.collection.immutable.ArraySeq
-            .unsafeWrapArray(tws.map(w => (w.tokens, w.preds))))
-          val wordTags = real.realignWithCounts(s.words, counts, preds).map(_._2)
-          val mentions = Decode.mentionsOf(s.guid, s.words, wordTags)
+        mediaRows ++ realSent.zip(Decode.detect(realSent, tag, cache)).flatMap { case (s, d) =>
+          val mentions = Decode.mentionsOf(s.guid, s.words, d.tags)
           if (!emitRelations) mentions.map(DetectRow(_, null))
           else {
             val rels = graft.kg.Relations.extract(s.words, mentions).map {
@@ -180,10 +161,13 @@ object KgPipeline {
     }
   }
 
-  /** Fused detect emitting mentions + typed relation candidates. */
+  /** Fused detect emitting mentions + typed relation candidates. Detect
+    * reads no [[Config]] setting; `cfg` lets a caller thread the run's
+    * one Config through every stage.
+    */
   def detectRows(spark: SparkSession, sents: Dataset[Sentence],
                  tagger: MentionTagger, cfg: Config = Config()): Dataset[DetectRow] =
-    fusedDetect(spark, sents, tagger, cfg, emitRelations = true)
+    fusedDetect(spark, sents, tagger, emitRelations = true)
 
   /** Mention-only view of the fused stage (driver queries, eval paths) —
     * same code path, relation extraction skipped.
@@ -191,7 +175,7 @@ object KgPipeline {
   def detectMentions(spark: SparkSession, sents: Dataset[Sentence],
                      tagger: MentionTagger, cfg: Config = Config()): Dataset[Mention] = {
     import spark.implicits._
-    fusedDetect(spark, sents, tagger, cfg, emitRelations = false).map(_.mention)
+    fusedDetect(spark, sents, tagger, emitRelations = false).map(_.mention)
   }
 
   /** A prepared dictionary side for [[run]], reused across runs over

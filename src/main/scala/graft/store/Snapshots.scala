@@ -85,15 +85,10 @@ object Snapshots {
     val batchId = snapshotId.stripPrefix("batch-").toLongOption.getOrElse(
       throw new IllegalArgumentException(
         s"not a stream snapshot id: '$snapshotId' (expected batch-<n>)"))
-    spark.read.parquet(StreamIngestPaths.streamPath(root))
+    spark.read.parquet(graft.streaming.StreamIngest.streamPath(root))
       .where(col("batch") <= batchId) // partition pruning on batch=
       .select("subj", "pred", "obj", "doc_id", "bucket", "conf",
         "span_offset", "sentence_idx")
       .as[Triple]
   }
-}
-
-/** Path indirection (avoids a circular dep on graft.streaming). */
-object StreamIngestPaths {
-  def streamPath(root: String) = s"$root/triples_stream"
 }

@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class NerServerSpec extends AnyFunSuite {
   lazy val spark = SparkTest.spark
 
-  private def withServer(f: (NerServer, Int, HttpClient) => Unit): Unit = {
+  private def withServer[T](f: (NerServer, Int, HttpClient) => T): T = {
     val registry = new ModelRegistry(
       Seq(ModelSpec("gazetteer", 1, "builtin", 7, default = true),
           ModelSpec("gazetteer-alt", 2, "builtin", 9, default = false)),
@@ -155,5 +155,32 @@ class NerServerSpec extends AnyFunSuite {
       val nonNum = post(client, s"$url/abc", "x")
       assert(nonNum.statusCode() == 404, nonNum.body())
     }
+  }
+
+  test("/ner predictions decode to the batch detect path's mentions") {
+    // one long sentence (several 128-piece windows) between short ones
+    val long = Seq.fill(40)("Anna Müller besuchte Berlin und").mkString(" ")
+    val text = s"Anna Müller war in Berlin . $long Wien . Karl sprach mit Anna Müller ."
+    val served = withServer { (_, port, client) =>
+      val r = post(client, s"http://localhost:$port/ner", text)
+      assert(r.statusCode() == 200, r.body())
+      val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(r.body())
+      (0 until json.size).map { i =>
+        val sent = json.get(i)
+        val tags = (0 until sent.size).map(j => sent.get(j).get("prediction").asText).toArray
+        i -> graft.text.Tags.bioToSpans(tags).toSet
+      }.toMap
+    }
+    val ss = spark
+    import ss.implicits._
+    val docs = Seq(graft.model.Doc("d0",
+      Array(graft.model.Span("text", text, null, 0)))).toDS()
+    val batch = KgPipeline.detectMentions(spark, KgPipeline.rawSentences(spark, docs),
+        new GazetteerTagger(KgPipeline.defaultGazetteer))
+      .collect().groupBy(_.sentence_idx)
+      .map { case (i, ms) => i -> ms.map(m => (m.start_word, m.end_word, m.entity_type)).toSet }
+    assert(served.size == 3, served)
+    assert(served.values.forall(_.nonEmpty), served)
+    assert(served == batch)
   }
 }
